@@ -26,11 +26,10 @@ and fans verdicts back out to doc pairs at the end; see _text_groups.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import functions as F
 
 from datafusion_table_providers_spark.core.case import QueryCase
+from datafusion_table_providers_spark.core.memo import materialize, memoized
 from datafusion_table_providers_spark.operators.relational import _r, _rsql, _t
 
 N_HASHES = 16
@@ -124,16 +123,6 @@ _SHINGLES_SQL = f"""
 # derive h1/h2 from the same md5 hex, so signatures stay oracle-identical.
 MH_PRIME = 4294967311  # smallest prime > 2^32
 
-#: (applicationId, sf_dir) → checkpointed signature table (1 row/doc).
-#: Recomputed identically by d02, d02b (hence d12/d34/p01/p02 via pairs)
-#: and c14 — memoized like the d12 labels; the heavy shingle explode runs
-#: once per session per sf_dir. See core/memo.py for the operational
-#: contract (non-recoverable checkpoints, clear_memo_caches()).
-from datafusion_table_providers_spark.core.memo import memo_key, register_cache
-
-_SIG_CACHE: dict = register_cache({})
-
-
 def _signature_df(spark, sf_dir):
     """Per-doc signature table for doc-keyed consumers (c14, d26),
     memoized + checkpointed. Built GROUP-LEVEL since r22: signatures are a
@@ -141,21 +130,19 @@ def _signature_df(spark, sf_dir):
     (:func:`_rep_signature_df`) and expanded back through the group map —
     identical rows, and on a duplicate-heavy corpus the shingle/hash work
     drops by the duplication factor."""
-    key = memo_key(spark, sf_dir)
-    cached = _SIG_CACHE.get(key)
-    if cached is not None:
-        return cached
-    m = _text_groups(spark, sf_dir)
-    rep = _rep_signature_df(spark, sf_dir).withColumnRenamed("doc_id", "gid")
-    if _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS:
-        rep = F.broadcast(rep)
-    out = (
-        m.join(rep, "gid")
-        .select("doc_id", *[f"band{b}" for b in range(N_BANDS)])
-        .localCheckpoint(eager=True)
-    )
-    _SIG_CACHE[key] = out
-    return out
+
+    def build():
+        m = _text_groups(spark, sf_dir)
+        rep = _rep_signature_df(spark, sf_dir).withColumnRenamed("doc_id", "gid")
+        if _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS:
+            rep = F.broadcast(rep)
+        return materialize(
+            m.join(rep, "gid").select(
+                "doc_id", *[f"band{b}" for b in range(N_BANDS)]
+            )
+        )[0]
+
+    return memoized(spark, sf_dir, "signatures", build)
 
 
 def _signature_plan_df(spark, sf_dir):
@@ -193,7 +180,7 @@ def _signatures_of(docs):
 
 
 def d02_minhash_signatures(spark, sf_dir):
-    # the RAW plan, not the memoized localCheckpoint (_signature_df): a solo
+    # the RAW plan, not the memoized checkpoint (_signature_df): a solo
     # signature build has no downstream fan-out to amortize a checkpoint, so
     # eagerly materializing blocks here is ~0.3s/run of pure overhead at
     # sf0.1 (and a full extra write of the table at scale). Consumers that
@@ -256,25 +243,7 @@ SEMIJOIN_MAX_FRACTION = 0.5
 #: 8 GB / 512M-row broadcast limit. Above this row count (but still under
 #: the fraction gate) the reduction runs as a SHUFFLE semi-join instead:
 #: same surviving rows, no driver/executor-resident hash relation.
-SEMIJOIN_MAX_BROADCAST_ROWS = int(
-    os.environ.get("SPARK_GRAFT_SEMIJOIN_MAX_BROADCAST_ROWS", "20000000")
-)
-
-#: (applicationId, sf_dir) → document row count. The adaptive gate below
-#: needs |corpus| on every d02b build, and d02b is rebuilt by d12/d34/d35/
-#: d37/p01/p02 within one driver run — memoize the parquet-statistics job
-#: per session per corpus (cleared by clear_memo_caches like every memo,
-#: so the bench still pays it once per timed run).
-_DOCN_CACHE: dict = register_cache({})
-
-
-def _doc_count(spark, sf_dir) -> int:
-    key = memo_key(spark, sf_dir)
-    n = _DOCN_CACHE.get(key)
-    if n is None:
-        n = _t(spark, sf_dir, "documents").count()
-        _DOCN_CACHE[key] = n
-    return n
+SEMIJOIN_MAX_BROADCAST_ROWS = 20_000_000
 
 
 # --- text groups: compute once per DISTINCT text, expand at the end -------
@@ -291,41 +260,40 @@ def _doc_count(spark, sf_dir) -> int:
 # emitted only when the rep actually has shingles (docs under SHINGLE_W
 # words produce no signature, so the per-doc pipeline never pairs them).
 
-#: (applicationId, sf_dir) → checkpointed (doc_id, gid) text-group map
-_GRP_CACHE: dict = register_cache({})
-#: (applicationId, sf_dir) → checkpointed rep signature table
-_REPSIG_CACHE: dict = register_cache({})
-#: (applicationId, sf_dir) → number of text groups (distinct texts)
-_REPN_CACHE: dict = register_cache({})
 
+def _text_group_entry(spark, sf_dir):
+    """(map, counts): the (doc_id, gid) text-group map, gid = min doc_id
+    among docs sharing this exact text, checkpointed with its row count
+    ``docs`` (one row per document with non-null text) and its group count
+    ``reps`` observed by the same job — memoized per (session, sf_dir)."""
 
-def _text_groups(spark, sf_dir):
-    """(doc_id, gid) with gid = min doc_id among docs sharing this exact
-    text — memoized + checkpointed per (session, sf_dir)."""
-    key = memo_key(spark, sf_dir)
-    m = _GRP_CACHE.get(key)
-    if m is None:
+    def build():
         th = _t(spark, sf_dir, "documents").select(
             "doc_id", F.md5("text").alias("th")
         )
         gids = th.groupBy("th").agg(F.min("doc_id").alias("gid"))
-        m = (
-            th.join(gids, "th")
-            .select("doc_id", "gid")
-            .localCheckpoint(eager=True)
+        return materialize(
+            th.join(gids, "th").select("doc_id", "gid"),
+            docs=F.count(F.lit(1)),
+            reps=F.count_if(F.col("doc_id") == F.col("gid")),
         )
-        _GRP_CACHE[key] = m
-    return m
+
+    return memoized(spark, sf_dir, "text_groups", build)
+
+
+def _text_groups(spark, sf_dir):
+    return _text_group_entry(spark, sf_dir)[0]
+
+
+def _doc_count(spark, sf_dir) -> int:
+    """Rows of the text-group map — the table the doc-count broadcast
+    gates put on the build side."""
+    return _text_group_entry(spark, sf_dir)[1]["docs"]
 
 
 def _rep_count(spark, sf_dir) -> int:
-    key = memo_key(spark, sf_dir)
-    n = _REPN_CACHE.get(key)
-    if n is None:
-        m = _text_groups(spark, sf_dir)
-        n = m.where(F.col("doc_id") == F.col("gid")).count()
-        _REPN_CACHE[key] = n
-    return n
+    """Number of text groups (distinct texts)."""
+    return _text_group_entry(spark, sf_dir)[1]["reps"]
 
 
 def _rep_docs(spark, sf_dir):
@@ -340,13 +308,12 @@ def _rep_docs(spark, sf_dir):
 def _rep_signature_df(spark, sf_dir):
     """Signature table over the group representatives (1 row per distinct
     text that has >= 1 shingle), memoized + checkpointed."""
-    key = memo_key(spark, sf_dir)
-    cached = _REPSIG_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = _signatures_of(_rep_docs(spark, sf_dir)).localCheckpoint(eager=True)
-    _REPSIG_CACHE[key] = out
-    return out
+    return memoized(
+        spark,
+        sf_dir,
+        "rep_signatures",
+        lambda: materialize(_signatures_of(_rep_docs(spark, sf_dir)))[0],
+    )
 
 
 def _expand_group_pairs(spark, sf_dir, gpairs, payload_cols):
@@ -410,7 +377,11 @@ def d02b_minhash_lsh_pairs(spark, sf_dir, shingles=None):
         buckets = one if buckets is None else buckets.union(one)
     a = buckets.alias("a")
     bb = buckets.alias("b")
-    cand = (
+    # output-bounded (LSH bucket collisions only) and referenced three
+    # times below (cand_docs twice via the union, the final join once) —
+    # cut the band-join lineage once instead of re-executing it per
+    # reference
+    cand, _ = materialize(
         a.join(
             bb,
             (F.col("a.band") == F.col("b.band"))
@@ -421,11 +392,6 @@ def d02b_minhash_lsh_pairs(spark, sf_dir, shingles=None):
             F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db")
         )
         .distinct()
-        # output-bounded (LSH bucket collisions only) and referenced three
-        # times below (cand_docs twice via the union, the final join once) —
-        # cut the band-join lineage once instead of re-executing it per
-        # reference
-        .localCheckpoint(eager=True)
     )
     # exact verification on candidate reps only. When built standalone the
     # rep shingle table is NOT checkpointed (it is ~10× rep-corpus size;
@@ -453,13 +419,14 @@ def d02b_minhash_lsh_pairs(spark, sf_dir, shingles=None):
     # ADAPTIVE: the reduction wins when duplicate-suspect texts are sparse
     # (the realistic regime) but costs ~20% when nearly every rep is a
     # candidate. Both counts are cheap (cand is checkpointed; the rep
-    # count is memoized), and all branches are result-identical, so this
-    # is the guide-§3.2 "pre-filters are not always on" decision made from
-    # the actual candidate fraction. NOTE the counts make DataFrame
-    # CONSTRUCTION eager: building this plan executes the candidate
-    # pipeline even if the result is never collected — inherent to a
-    # data-dependent plan choice; plan-only tooling should target the
-    # branches directly.
+    # count was observed while the text groups were built), and all
+    # branches are result-identical, so this is the guide-§3.2 "pre-filters
+    # are not always on" decision made from the actual candidate fraction.
+    # n_cand is a DISTINCT count, which observe() cannot carry, so it is
+    # its own job. NOTE the counts make DataFrame CONSTRUCTION eager:
+    # building this plan executes the candidate pipeline even if the
+    # result is never collected — inherent to a data-dependent plan choice;
+    # plan-only tooling should target the branches directly.
     n_cand = cand_docs.count()
     if n_cand < SEMIJOIN_MAX_FRACTION * _rep_count(spark, sf_dir):
         if n_cand <= SEMIJOIN_MAX_BROADCAST_ROWS:
@@ -648,8 +615,9 @@ D03B_EXPAND_PARTS = 4
 def d03b_simhash_pairs(spark, sf_dir):
     from pyspark.sql import Window
 
-    # lineage cut before the band self-join (see d02b)
-    sig = d03_simhash(spark, sf_dir).localCheckpoint(eager=True)
+    # lineage cut before the band self-join (see d02b); its row count —
+    # one per doc with a simhash — sizes the group map m below
+    sig, n = materialize(d03_simhash(spark, sf_dir), docs=F.count(F.lit(1)))
     # Run the band self-join once per DISTINCT SIMHASH VALUE, not once per
     # doc: hamming (and hence membership) depends only on the two simhash
     # values, and a near-dup-heavy corpus collapses many docs onto one
@@ -731,14 +699,14 @@ def d03b_simhash_pairs(spark, sf_dir):
     ma = m_spread.select(F.col("gid").alias("ga"), F.col("doc_id").alias("xa"))
     mb = m_spread.select(F.col("gid").alias("gb"), F.col("doc_id").alias("xb"))
     # The doc→group map is 2 longs/doc; broadcast it into the expansion
-    # joins whenever it fits (memoized count, same cap as d02b's reduction)
+    # joins whenever it fits (observed count, same cap as d02b's reduction)
     # so the EXPANDED pair stream — orders of magnitude bigger than its
     # inputs — is produced map-side and never re-shuffled. Without the
     # explicit hint the map sits behind a checkpoint (unknown stats) and a
     # composed plan (d35) falls back to sort-merge, re-exchanging the full
     # 157M-row intermediate. Past the cap the joins shuffle — correct,
     # just not broadcast-accelerated (AQE skew-split applies there).
-    small = _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS
+    small = n["docs"] <= SEMIJOIN_MAX_BROADCAST_ROWS
     build_a = F.broadcast(ma) if small else ma
     build_b = F.broadcast(mb) if small else mb
     cross = (
@@ -902,74 +870,66 @@ FROM inter JOIN sizes s1 ON da = s1.doc_id JOIN sizes s2 ON db = s2.doc_id
 D12_JACCARD_TAU = 0.5
 
 
-#: (applicationId, normalized sf_dir) → checkpointed labels DF. The
-#: component labels are recomputed identically by every caller (d12 row,
-#: d34 keep-best, p01/p02 pipelines — up to four times in one driver run);
-#: the result is a localCheckpoint'd table of duplicate-cluster members
-#: (small), valid for the life of the SparkSession, and the input parquet
-#: is immutable per sf_dir — so memoizing is safe and cuts the repeated
-#: 20-round label-propagation cost.
-_D12_CACHE: dict = register_cache({})
+#: min-label propagation needs ≤ diameter rounds; a deeper chain fails loudly
+D12_MAX_ROUNDS = 20
 
 
 def d12_dedup_components(spark, sf_dir):
-    key = memo_key(spark, sf_dir)
-    cached = _D12_CACHE.get(key)
-    if cached is not None:
-        return cached
-    pairs = (
+    # memoized: the component labels are recomputed identically by every
+    # caller (d12 row, d34 keep-best, p01/p02 pipelines — up to four times
+    # in one driver run), so the label propagation runs once per session
+    return memoized(spark, sf_dir, "d12_labels", lambda: _d12_build(spark, sf_dir))
+
+
+def _d12_build(spark, sf_dir):
+    pairs, _ = materialize(  # cut the heavy minhash lineage once
         d02b_minhash_lsh_pairs(spark, sf_dir)
         .filter(F.col("jaccard") >= D12_JACCARD_TAU)
         .select("da", "db")
-        .localCheckpoint(eager=True)  # cut the heavy minhash lineage once
     )
     edges = pairs.union(
         pairs.select(F.col("db").alias("da"), F.col("da").alias("db"))
     ).select(F.col("da").alias("src"), F.col("db").alias("dst"))
     # round 0 fused into the seed: with initial lbl(x) = x, the first
     # propagation round computes exactly least(node, min(neighbor)) — so
-    # seed with that directly and save one full join+checkpoint+count round
+    # seed with that directly and save one full join+checkpoint round
     # (edges are bidirectional, so groupBy(src) covers every node)
     labels = edges.groupBy(F.col("src").alias("node")).agg(
         F.least(F.col("node"), F.min("dst")).alias("lbl")
     )
     changed = None
-    for _ in range(20):  # min-label propagation needs ≤ diameter rounds
+    for _ in range(D12_MAX_ROUNDS):
         nbr = (
             edges.join(labels, edges.dst == F.col("node"))
             .groupBy(F.col("src").alias("node2"))
             .agg(F.min("lbl").alias("nbr_lbl"))
         )
-        new_labels = (
-            labels.join(nbr, labels.node == F.col("node2"), "left")
-            .select(
-                "node",
-                F.least(F.col("lbl"), F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
-            )
+        # new lbl = least(lbl, coalesce(nbr_lbl, lbl)) differs from lbl
+        # exactly when nbr_lbl < lbl, so the round's own checkpoint job
+        # counts the labels that moved
+        step, c = materialize(
+            labels.join(nbr, labels.node == F.col("node2"), "left").select(
+                "node", "lbl", "nbr_lbl"
+            ),
+            changed=F.count_if(F.col("nbr_lbl") < F.col("lbl")),
         )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-            .filter(F.col("n.lbl") != F.col("o.lbl"))
-            .count()
+        changed = c["changed"]
+        labels = step.select(
+            "node", F.least(F.col("lbl"), F.coalesce("nbr_lbl", "lbl")).alias("lbl")
         )
-        labels = new_labels
         if changed == 0:
             break
     if changed != 0:
         # returning unconverged labels would silently split true components
         # (and diverge from the exact recursive-CTE oracle) — fail loudly;
-        # chains deeper than 20 hops need a higher round cap
+        # deeper chains need a higher round cap
         raise RuntimeError(
-            "connected-components did not converge within 20 rounds "
-            f"({changed} labels still changing) — raise the round cap"
+            f"connected-components did not converge within {D12_MAX_ROUNDS} "
+            f"rounds ({changed} labels still changing) — raise the round cap"
         )
-    out = labels.select(
+    return labels.select(
         F.col("node").alias("doc_id"), F.col("lbl").alias("component_id")
     )
-    _D12_CACHE[key] = out
-    return out
 
 
 def _d12_sql() -> str:
@@ -1150,8 +1110,13 @@ def d22_editdist_neardup(spark, sf_dir):
     mb = m.select(F.col("gid").alias("gb"), F.col("doc_id").alias("xb"))
     # see d03b: broadcast the 2-long-per-doc group map into the expansion
     # joins when it fits, so the fanned-out pair stream is produced
-    # map-side instead of being re-exchanged by a sort-merge fallback
-    if _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS:
+    # map-side instead of being re-exchanged by a sort-merge fallback. The
+    # map is never materialized, so its size is a plain document count
+    # (a parquet-statistics job, memoized per session)
+    n_docs = memoized(
+        spark, sf_dir, "doc_count", lambda: _t(spark, sf_dir, "documents").count()
+    )
+    if n_docs <= SEMIJOIN_MAX_BROADCAST_ROWS:
         ma, mb = F.broadcast(ma), F.broadcast(mb)
     return (
         rep_pairs.join(ma, "ga")
@@ -1238,7 +1203,9 @@ def d26_fuzzy_decontaminate(spark, sf_dir):
         buckets = one if buckets is None else buckets.union(one)
     a = buckets.alias("a")
     bb = buckets.alias("b")
-    gcand = (
+    # output-bounded band collisions, referenced twice below (semi probe +
+    # final join): cut the band-join lineage once
+    gcand, _ = materialize(
         a.join(
             F.broadcast(bb),
             (F.col("a.band") == F.col("b.band"))
@@ -1247,9 +1214,6 @@ def d26_fuzzy_decontaminate(spark, sf_dir):
         )
         .select(F.col("a.doc_id").alias("ga"), F.col("b.doc_id").alias("gb"))
         .distinct()
-        # output-bounded band collisions, referenced twice below (semi
-        # probe + final join): cut the band-join lineage once
-        .localCheckpoint(eager=True)
     )
     sh = _shingles_of(_rep_docs(spark, sf_dir))
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -1455,9 +1419,7 @@ def d35_ensemble_neardup(spark, sf_dir):
     # one lineage cut for the shared table). SimHash blocks on single
     # words, not shingles — it keeps its own pass (and its own
     # distinct-simhash grouping, which subsumes identical texts).
-    shingles = _shingles_of(_rep_docs(spark, sf_dir)).localCheckpoint(
-        eager=True
-    )
+    shingles, _ = materialize(_shingles_of(_rep_docs(spark, sf_dir)))
     mh = d02b_minhash_lsh_pairs(spark, sf_dir, shingles=shingles).select(
         "da", "db", F.lit(_D35_TAG["minhash"]).alias("tag")
     )
@@ -1478,14 +1440,10 @@ def d35_ensemble_neardup(spark, sf_dir):
     # reduction; §2.2 shuffle fewer bytes). Past the broadcast cap the semi
     # join shuffles both sides — still |small| + one pass over sh, never an
     # aggregate of sh.
-    small = (
-        mh.unionByName(ng)
-        .groupBy("da", "db")
-        .agg(F.sum("tag").alias("mask_s"))
-        # referenced twice (semi-join probe + final left join): cut the
-        # full minhash+ngram lineage once instead of executing it per
-        # reference
-        .localCheckpoint(eager=True)
+    # referenced twice (semi-join probe + final left join): cut the full
+    # minhash+ngram lineage once instead of executing it per reference
+    small, _ = materialize(
+        mh.unionByName(ng).groupBy("da", "db").agg(F.sum("tag").alias("mask_s"))
     )
     # Simhash membership WITHOUT materializing d03b's pair stream: with 4
     # byte-bands and HAMMING_MAX = 3, pigeonhole guarantees every

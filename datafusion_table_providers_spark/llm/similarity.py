@@ -34,6 +34,7 @@ import hashlib
 from pyspark.sql import functions as F
 
 from datafusion_table_providers_spark.core.case import QueryCase
+from datafusion_table_providers_spark.core.memo import materialize, memoized
 from datafusion_table_providers_spark.operators.relational import _r, _rsql, _t
 
 N_QUERIES = 5
@@ -550,7 +551,7 @@ def d06b_ivf_ann(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings").select(
         "vec_id", _dvec("embedding").alias("v")
     ).filter(_dot(F.col("v"), F.col("v")) > 0)  # no zero-norm cosines
-    ranked = _cell_rank_df(spark, sf_dir, e).localCheckpoint(eager=True)
+    ranked, _ = materialize(_cell_rank_df(spark, sf_dir, e))
     cells = ranked.filter(F.col("crnk") == 1).select(
         "vec_id", "v", F.col("cent_id").alias("cell")
     )
@@ -691,30 +692,15 @@ def _km_assign(df, cents):
     return with_d.select("vec_id", "iv", cid.alias("cid"))
 
 
-#: (applicationId, sf_dir) → memoized heavy artifacts, one computation per
-#: session (same discipline as dedup._SIG_CACHE): the Lloyd's assignment
-#: (collected-and-iterated, used by d17 AND d20 in one window row), the PQ
-#: codebook (a driver-side list collected per call otherwise), and the
-#: checkpointed PQ codes (the giant-codegen encode stage, consumed by
-#: d18/d18b/d33 — three times in the d16b row).
-from datafusion_table_providers_spark.core.memo import memo_key as _memo_key
-from datafusion_table_providers_spark.core.memo import register_cache
-
-_KM_CACHE: dict = register_cache({})
-_PQ_CB_CACHE: dict = register_cache({})
-_PQ_ENC_CACHE: dict = register_cache({})
-#: vec_id → per-segment quantized query vectors (filled by _pq_codebook)
-_PQ_QSEG_CACHE: dict = register_cache({})
-
-
 def _km_fit_assign(spark, sf_dir):
     """Train KM_ITERS rounds of integer Lloyd's and return the final
-    per-vector assignment: (vec_id, iv, cid)."""
-    key = _memo_key(spark, sf_dir)
-    cached = _KM_CACHE.get(key)
-    if cached is not None:
-        return cached
-    q = _km_quantized(spark, sf_dir).localCheckpoint(eager=True)
+    per-vector assignment: (vec_id, iv, cid). Memoized: d17 and d20 share
+    one fit in a window row."""
+    return memoized(spark, sf_dir, "km_assign", lambda: _km_fit(spark, sf_dir))
+
+
+def _km_fit(spark, sf_dir):
+    q, _ = materialize(_km_quantized(spark, sf_dir))
     cents = [
         r.iv for r in q.filter(F.col("vec_id") < KM_K).orderBy("vec_id").collect()
     ]
@@ -736,9 +722,7 @@ def _km_fit_assign(spark, sf_dir):
             (r.cid, [p.c for p in r.pairs]) for r in rows
         )
         cents = [new_cents.get(i, cents[i]) for i in range(KM_K)]
-    out = _km_assign(q, cents).localCheckpoint(eager=True)
-    _KM_CACHE[key] = out
-    return out
+    return materialize(_km_assign(q, cents))[0]
 
 
 def d17_kmeans_clusters(spark, sf_dir):
@@ -940,16 +924,17 @@ PQ_TOPK = 10
 
 
 def _pq_codebook(spark, sf_dir):
-    """cb[m][k] = segment m of quantized vector k (python list of longs).
+    """(cb, qsegs), memoized: cb[m][k] = segment m of quantized vector k
+    (python list of longs).
 
-    The same collect also caches the ADC QUERY segments (the queries are
-    the first PQ_NQ vectors, a subset of the PQ_K codebook vectors) keyed
-    by actual vec_id — `_adc_scored` precomputes its distance lookup table
-    from them without a second job."""
-    key = _memo_key(spark, sf_dir)
-    cached = _PQ_CB_CACHE.get(key)
-    if cached is not None:
-        return cached
+    The same collect also yields the ADC QUERY segments qsegs (the queries
+    are the first PQ_NQ vectors, a subset of the PQ_K codebook vectors)
+    keyed by actual vec_id — `_adc_scored` precomputes its distance lookup
+    table from them without a second job."""
+    return memoized(spark, sf_dir, "pq_codebook", lambda: _pq_collect(spark, sf_dir))
+
+
+def _pq_collect(spark, sf_dir):
     rows = (
         _km_quantized(spark, sf_dir)
         .filter(F.col("vec_id") < PQ_K)
@@ -960,18 +945,17 @@ def _pq_codebook(spark, sf_dir):
         [list(r.iv[m * PQ_SEG : (m + 1) * PQ_SEG]) for r in rows]
         for m in range(PQ_M)
     ]
-    _PQ_QSEG_CACHE[key] = {
+    qsegs = {
         r.vec_id: [
             list(r.iv[m * PQ_SEG : (m + 1) * PQ_SEG]) for m in range(PQ_M)
         ]
         for r in rows
         if r.vec_id < PQ_NQ
     }
-    _PQ_CB_CACHE[key] = cb
-    return cb
+    return cb, qsegs
 
 
-def _adc_scored(spark, sf_dir, cb, enc):
+def _adc_scored(spark, sf_dir):
     """(qid, cid, adist) — ADC distances via a driver-precomputed lookup
     table.
 
@@ -986,7 +970,7 @@ def _adc_scored(spark, sf_dir, cb, enc):
     expression tree the dominant driver-side plan-analysis cost of the
     d16b merged row (~3.7s/build at any SF). Same exact integer distances,
     same tie-breaks."""
-    qsegs = _PQ_QSEG_CACHE[_memo_key(spark, sf_dir)]
+    cb, qsegs = _pq_codebook(spark, sf_dir)
     lut = []
     for m in range(PQ_M):
         flat = []
@@ -1010,7 +994,9 @@ def _adc_scored(spark, sf_dir, cb, enc):
         .filter(F.col("vec_id") < PQ_NQ)
         .select(F.col("vec_id").alias("qid"))
     )
-    cand = enc.join(F.broadcast(queries), F.col("vec_id") != F.col("qid"))
+    cand = _pq_encoded(spark, sf_dir).join(
+        F.broadcast(queries), F.col("vec_id") != F.col("qid")
+    )
     adist = None
     for m in range(PQ_M):
         lut_lit = F.array(*[F.lit(int(v)) for v in lut[m]]).cast("array<long>")
@@ -1039,7 +1025,7 @@ def _int_dist(a, b):
     )
 
 
-def _pq_encoded(spark, sf_dir, cb):
+def _pq_encoded(spark, sf_dir):
     """vec_id, codes array<int>[PQ_M], recon_err (exact int distance).
 
     The per-segment argmin is computed over an ARRAY of the PQ_K codebook
@@ -1051,14 +1037,14 @@ def _pq_encoded(spark, sf_dir, cb):
     Memoized + checkpointed; plan assertions must target
     :func:`_pq_encode_plan_df` (the raw builder) — the checkpointed result
     presents as a bare ExistingRDD scan with nothing left to assert."""
-    cb_key = tuple(tuple(tuple(seg) for seg in m) for m in cb)
-    key = (*_memo_key(spark, sf_dir), cb_key)
-    cached = _PQ_ENC_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = _pq_encode_plan_df(spark, sf_dir, cb).localCheckpoint(eager=True)
-    _PQ_ENC_CACHE[key] = out
-    return out
+    return memoized(
+        spark,
+        sf_dir,
+        "pq_codes",
+        lambda: materialize(
+            _pq_encode_plan_df(spark, sf_dir, _pq_codebook(spark, sf_dir)[0])
+        )[0],
+    )
 
 
 def _pq_encode_plan_df(spark, sf_dir, cb):
@@ -1102,15 +1088,13 @@ def _pq_encode_plan_df(spark, sf_dir, cb):
 
 
 def d18_pq_encode(spark, sf_dir):
-    return _pq_encoded(spark, sf_dir, _pq_codebook(spark, sf_dir))
+    return _pq_encoded(spark, sf_dir)
 
 
 def d18b_pq_adc(spark, sf_dir):
     """Asymmetric-distance top-k: query-vs-codebook distances precomputed
     driver-side (see _adc_scored), candidates scored by code lookup."""
-    cb = _pq_codebook(spark, sf_dir)
-    enc = _pq_encoded(spark, sf_dir, cb)
-    scored = _adc_scored(spark, sf_dir, cb, enc)
+    scored = _adc_scored(spark, sf_dir)
     from pyspark.sql import Window
 
     w = Window.partitionBy("qid").orderBy(F.asc("adist"), F.asc("cid"))
@@ -1248,12 +1232,10 @@ RR_TOPK = 10
 
 
 def d33_pq_rerank(spark, sf_dir):
-    cb = _pq_codebook(spark, sf_dir)
-    enc = _pq_encoded(spark, sf_dir, cb)
     vecs = _km_quantized(spark, sf_dir)
     # stage 1: ADC shortlist from the driver-precomputed lookup table
     # (shared with d18b — see _adc_scored)
-    scored = _adc_scored(spark, sf_dir, cb, enc)
+    scored = _adc_scored(spark, sf_dir)
     from pyspark.sql import Window
 
     wa = Window.partitionBy("qid").orderBy(F.asc("adist"), F.asc("cid"))
