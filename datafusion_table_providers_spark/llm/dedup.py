@@ -134,10 +134,8 @@ def _signature_df(spark, sf_dir):
     def build():
         m = _text_groups(spark, sf_dir)
         rep = _rep_signature_df(spark, sf_dir).withColumnRenamed("doc_id", "gid")
-        if _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS:
-            rep = F.broadcast(rep)
         return materialize(
-            m.join(rep, "gid").select(
+            m.join(_bounded_broadcast(rep, _rep_count(spark, sf_dir)), "gid").select(
                 "doc_id", *[f"band{b}" for b in range(N_BANDS)]
             )
         )[0]
@@ -246,19 +244,31 @@ SEMIJOIN_MAX_FRACTION = 0.5
 SEMIJOIN_MAX_BROADCAST_ROWS = 20_000_000
 
 
+def _bounded_broadcast(df, rows):
+    """``df`` with a broadcast hint when ``rows`` — its row count, or an
+    upper bound of it — fits under SEMIJOIN_MAX_BROADCAST_ROWS; past the
+    cap ``df`` as is, and the join shuffles. The one broadcast gate of
+    this module: every other ``F.broadcast(`` carries a ``# bound:`` note."""
+    return F.broadcast(df) if rows <= SEMIJOIN_MAX_BROADCAST_ROWS else df
+
+
 # --- text groups: compute once per DISTINCT text, expand at the end -------
 # Signatures, band keys, shingle sets — hence LSH candidacy and exact
-# Jaccard — are pure functions of the TEXT. A dedup-heavy corpus (the
-# regime these operators exist for; the sf1 synth replicates every text
-# 10×) therefore repeats the entire shingle→hash→join pipeline per copy.
-# Group docs by md5(text) (the d01 primitive — a 32-byte shuffle key per
-# doc), run the pipeline once per group REPRESENTATIVE, and fan verdicts
-# back out to doc pairs with gid-equi-joins at the very end: the same
-# group/expand discipline d22 applies to prefixes and d03b to simhash
-# values (guide §1.2 step 1: fix the algorithm; §8.4: decide with small
-# rows, attach cheaply). Intra-group pairs are jaccard-1.0 by identity and
-# emitted only when the rep actually has shingles (docs under SHINGLE_W
-# words produce no signature, so the per-doc pipeline never pairs them).
+# Jaccard — are pure functions of the TEXT, and a dedup-heavy corpus (the
+# sf1 synth replicates every text 10×) would repeat the whole
+# shingle→hash→join pipeline per copy. Every pair operator of this module
+# (d02b/d04/d26 per text, d22 per prefix, d03b per simhash value) therefore
+# follows one contract (guide §1.2 step 1: fix the algorithm; §8.4: decide
+# with small rows, attach cheaply):
+#   1. group: a (doc_id, gid) map, gid = the min doc_id of the group;
+#   2. pairs: verdicts on group REPRESENTATIVES as rows (ga, gb, *payload)
+#      with ga <= gb, where a diagonal row (g, g, ...) carries the verdict
+#      on two members of one group (d02b emits it only for reps with a
+#      signature: texts under SHINGLE_W words never pair);
+#   3. expand: :func:`_expand_group_pairs` fans the rows out to doc pairs
+#      with two gid-equi-joins against the map.
+# Every broadcast goes through :func:`_bounded_broadcast`, gated by an
+# observed row count of the table it broadcasts.
 
 
 def _text_group_entry(spark, sf_dir):
@@ -286,8 +296,7 @@ def _text_groups(spark, sf_dir):
 
 
 def _doc_count(spark, sf_dir) -> int:
-    """Rows of the text-group map — the table the doc-count broadcast
-    gates put on the build side."""
+    """Rows of the text-group map."""
     return _text_group_entry(spark, sf_dir)[1]["docs"]
 
 
@@ -300,9 +309,9 @@ def _rep_docs(spark, sf_dir):
     """The documents table restricted to text-group representatives."""
     m = _text_groups(spark, sf_dir)
     rep_ids = m.where(F.col("doc_id") == F.col("gid")).select("doc_id")
-    if _rep_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS:
-        rep_ids = F.broadcast(rep_ids)
-    return _t(spark, sf_dir, "documents").join(rep_ids, "doc_id", "left_semi")
+    return _t(spark, sf_dir, "documents").join(
+        _bounded_broadcast(rep_ids, _rep_count(spark, sf_dir)), "doc_id", "left_semi"
+    )
 
 
 def _rep_signature_df(spark, sf_dir):
@@ -316,57 +325,57 @@ def _rep_signature_df(spark, sf_dir):
     )
 
 
-def _expand_group_pairs(spark, sf_dir, gpairs, payload_cols):
-    """Fan group-pair verdicts (ga, gb, *payload) back out to doc pairs
-    (da < db, *payload). ``gpairs`` must hold ga < gb over distinct group
-    pairs; every unordered cross-group doc pair appears exactly once and
-    least/greatest restores the da < db order (groups partition docs)."""
-    m = _text_groups(spark, sf_dir)
-    ma = m.select(F.col("gid").alias("ga"), F.col("doc_id").alias("xa"))
-    mb = m.select(F.col("gid").alias("gb"), F.col("doc_id").alias("xb"))
-    # the doc→group map is 2 longs/doc: broadcast it into the expansion
-    # joins when it fits (see d03b/d22) so the fanned-out pair stream is
-    # produced map-side; past the cap the joins shuffle (AQE skew-split
-    # applies there)
-    if _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS:
-        ma, mb = F.broadcast(ma), F.broadcast(mb)
-    return (
-        gpairs.join(ma, "ga")
-        .join(mb, "gb")
-        .select(
-            F.least("xa", "xb").alias("da"),
-            F.greatest("xa", "xb").alias("db"),
-            *payload_cols,
+def _expand_group_pairs(gpairs, m, rows, payload_cols, sides=None):
+    """Fan group-pair verdicts (ga, gb, *payload) out to member pairs
+    through the (doc_id, gid) map ``m`` of at most ``rows`` rows.
+
+    Symmetric (``sides=None``): ``gpairs`` holds ga <= gb; the result is
+    (da < db, *payload) with every unordered member pair exactly once —
+    groups partition the docs, a cross-group pair is ordered by
+    least/greatest and a diagonal row keeps only its xa < xb pairs.
+    Directional (``sides=(cond_a, cond_b)``): the members of ga that pass
+    ``cond_a`` times the members of gb that pass ``cond_b``, as
+    (xa, xb, *payload) in that order.
+
+    The map is 2 longs per doc: broadcast under the cap, the expanded pair
+    stream — orders of magnitude bigger than its inputs — is produced
+    map-side and never re-shuffled; past the cap the joins shuffle (AQE
+    skew-split applies there)."""
+
+    def side(g, x, cond):
+        members = m if cond is None else m.where(cond)
+        return _bounded_broadcast(
+            members.select(F.col("gid").alias(g), F.col("doc_id").alias(x)), rows
         )
+
+    cond_a, cond_b = sides or (None, None)
+    pairs = gpairs.join(side("ga", "xa", cond_a), "ga").join(
+        side("gb", "xb", cond_b), "gb"
+    )
+    if sides:
+        return pairs.select("xa", "xb", *payload_cols)
+    once = (F.col("ga") < F.col("gb")) | (F.col("xa") < F.col("xb"))
+    return pairs.filter(once).select(
+        F.least("xa", "xb").alias("da"),
+        F.greatest("xa", "xb").alias("db"),
+        *payload_cols,
     )
 
 
-def _intra_group_pairs(spark, sf_dir, groups, payload_cols):
-    """All (da < db) doc pairs inside each group of ``groups`` (gid,
-    *payload) — the identical-text pairs, which carry a constant payload
-    (jaccard 1.0 / shared = the group's own shingle stats)."""
-    m = _text_groups(spark, sf_dir)
-    ma = m.select(F.col("gid"), F.col("doc_id").alias("xa"))
-    mb = m.select(F.col("gid"), F.col("doc_id").alias("xb"))
-    if _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS:
-        ma, mb = F.broadcast(ma), F.broadcast(mb)
-    return (
-        groups.join(ma, "gid")
-        .join(mb, "gid")
-        .filter(F.col("xa") < F.col("xb"))
-        .select(
-            F.col("xa").alias("da"), F.col("xb").alias("db"), *payload_cols
-        )
-    )
+def _rep_jaccard_pairs(spark, sf_dir, rep_shingles=None):
+    """Verified MinHash-LSH pairs of text-group representatives: (ga, gb,
+    jaccard) for every rep pair ga < gb sharing a full band key, with its
+    exact shingle Jaccard, plus a diagonal row (g, g, 1.0) per rep with a
+    signature — identical texts share every band key and every shingle.
+    d02b expands it symmetrically, d26 from train to eval members.
 
-
-def d02b_minhash_lsh_pairs(spark, sf_dir, shingles=None):
-    # GROUP LEVEL (r22): candidacy and exact Jaccard are pure functions of
-    # the two TEXTS, so the whole band-join + shingle-verification pipeline
-    # runs once per distinct text (group representative) and the verdicts
-    # fan back out to doc pairs at the end (see _text_groups). The rep
-    # signature table arrives checkpointed + memoized — the lineage cut
-    # that keeps the 4-band union self-join from embedding the hash plan 8x.
+    The rep signature table arrives checkpointed + memoized — the lineage
+    cut that keeps the 4-band union self-join from embedding the hash plan
+    8x. ``rep_shingles`` is the rep-level distinct shingle table when an
+    ensemble caller (d35) shares one checkpointed copy among several
+    consumers; built here it is NOT checkpointed (it is ~10× rep-corpus
+    size; re-deriving it per reference beats writing it to executor-local
+    disk) — same rows either way."""
     sig = _rep_signature_df(spark, sf_dir)
     # bucket join per band: reps sharing any full band key are candidates
     buckets = None
@@ -380,8 +389,8 @@ def d02b_minhash_lsh_pairs(spark, sf_dir, shingles=None):
     # output-bounded (LSH bucket collisions only) and referenced three
     # times below (cand_docs twice via the union, the final join once) —
     # cut the band-join lineage once instead of re-executing it per
-    # reference
-    cand, _ = materialize(
+    # reference; the same job observes its pair count
+    cand, c = materialize(
         a.join(
             bb,
             (F.col("a.band") == F.col("b.band"))
@@ -391,26 +400,20 @@ def d02b_minhash_lsh_pairs(spark, sf_dir, shingles=None):
         .select(
             F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db")
         )
-        .distinct()
+        .distinct(),
+        pairs=F.count(F.lit(1)),
     )
-    # exact verification on candidate reps only. When built standalone the
-    # rep shingle table is NOT checkpointed (it is ~10× rep-corpus size;
-    # re-deriving it per reference beats writing it to executor-local
-    # disk); an ensemble caller (d35) that feeds SEVERAL shingle consumers
-    # passes one shared checkpointed REP table via ``shingles`` instead —
-    # same rows either way.
     sh = (
-        shingles
-        if shingles is not None
+        rep_shingles
+        if rep_shingles is not None
         else _shingles_of(_rep_docs(spark, sf_dir))
     )
     # Semi-join reduction (guide §3.2): the shingle self-join only has to
-    # cover reps that appear in some candidate pair — broadcast the (output-
-    # bounded, ≤2×|cand|) candidate rep set and drop every other rep's
-    # shingles BEFORE the s=s exchange. Pair counts between surviving reps
-    # are untouched, so the cand-join result is identical; what changes is
-    # that the big exchange no longer carries shingles of never-candidate
-    # texts (at 100 TB: almost all of them).
+    # cover reps that appear in some candidate pair — drop every other
+    # rep's shingles BEFORE the s=s exchange. Pair counts between surviving
+    # reps are untouched, so the cand-join result is identical; what
+    # changes is that the big exchange no longer carries shingles of
+    # never-candidate texts (at 100 TB: almost all of them).
     cand_docs = (
         cand.select(F.col("da").alias("doc_id"))
         .union(cand.select(F.col("db").alias("doc_id")))
@@ -419,7 +422,7 @@ def d02b_minhash_lsh_pairs(spark, sf_dir, shingles=None):
     # ADAPTIVE: the reduction wins when duplicate-suspect texts are sparse
     # (the realistic regime) but costs ~20% when nearly every rep is a
     # candidate. Both counts are cheap (cand is checkpointed; the rep
-    # count was observed while the text groups were built), and all
+    # count was observed while the text groups were built), and both
     # branches are result-identical, so this is the guide-§3.2 "pre-filters
     # are not always on" decision made from the actual candidate fraction.
     # n_cand is a DISTINCT count, which observe() cannot carry, so it is
@@ -429,21 +432,17 @@ def d02b_minhash_lsh_pairs(spark, sf_dir, shingles=None):
     # plan-only tooling should target the branches directly.
     n_cand = cand_docs.count()
     if n_cand < SEMIJOIN_MAX_FRACTION * _rep_count(spark, sf_dir):
-        if n_cand <= SEMIJOIN_MAX_BROADCAST_ROWS:
-            sh_c = sh.join(F.broadcast(cand_docs), "doc_id")
-        else:
-            # too many candidate ids to hold as a broadcast hash relation —
-            # keep the reduction but let it shuffle (plain semi-join)
-            sh_c = sh.join(cand_docs, "doc_id", "left_semi")
-    else:
-        sh_c = sh
+        # an inner join with the distinct id set: the same rows as a left
+        # semi-join, but Spark then estimates the restricted table the way
+        # it always has, which keeps the joins below on their planned sides
+        sh = sh.join(_bounded_broadcast(cand_docs, n_cand), "doc_id")
     # per-rep shingle counts from the (possibly) restricted table: the
-    # da/db joins below only ever look up candidate reps, and sh_c keeps
-    # ALL shingles of each surviving rep, so the counts are identical
-    sizes = sh_c.groupBy("doc_id").agg(F.count("*").alias("n"))
+    # da/db joins below only ever look up candidate reps, and the reduction
+    # keeps ALL shingles of each surviving rep, so the counts are identical
+    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     pair_stream = (
-        sh_c.alias("x")
-        .join(sh_c.alias("y"), F.col("x.s") == F.col("y.s"))
+        sh.alias("x")
+        .join(sh.alias("y"), F.col("x.s") == F.col("y.s"))
         .filter(F.col("x.doc_id") < F.col("y.doc_id"))
         .select(
             F.col("x.doc_id").alias("da"), F.col("y.doc_id").alias("db")
@@ -451,23 +450,22 @@ def d02b_minhash_lsh_pairs(spark, sf_dir, shingles=None):
     )
     # PAIR-level reduction before the groupBy exchange: only pairs present
     # in `cand` survive the final inner join, so drop the rest of the
-    # shared-shingle pair stream map-side with a broadcast LEFT SEMI
-    # against the (checkpointed, output-bounded) candidate table — the
-    # rep-level reduction above cannot catch candidate reps that pair with
-    # the WRONG partner (two candidate reps sharing shingles but no band).
-    # (guide §3.2, §2.3: aggregate/filter before the shuffle.) Counts for
+    # shared-shingle pair stream map-side with a LEFT SEMI against the
+    # (checkpointed, output-bounded) candidate table — the rep-level
+    # reduction above cannot catch candidate reps that pair with the WRONG
+    # partner (two candidate reps sharing shingles but no band). (guide
+    # §3.2, §2.3: aggregate/filter before the shuffle.) Counts for
     # surviving pairs are untouched. Past the broadcast cap the semi-join
     # shuffles by the same (da, db) key the aggregate needs — one exchange
     # of the stream either way.
-    cand_probe = (
-        F.broadcast(cand) if n_cand <= SEMIJOIN_MAX_BROADCAST_ROWS else cand
-    )
     inter = (
-        pair_stream.join(cand_probe, ["da", "db"], "left_semi")
+        pair_stream.join(
+            _bounded_broadcast(cand, c["pairs"]), ["da", "db"], "left_semi"
+        )
         .groupBy("da", "db")
         .agg(F.count("*").alias("inter"))
     )
-    gpairs = (
+    verified = (
         cand.join(inter, ["da", "db"])
         .join(sizes.withColumnRenamed("doc_id", "da").withColumnRenamed("n", "na"), "da")
         .join(sizes.withColumnRenamed("doc_id", "db").withColumnRenamed("n", "nb"), "db")
@@ -479,17 +477,25 @@ def d02b_minhash_lsh_pairs(spark, sf_dir, shingles=None):
             ).alias("jaccard"),
         )
     )
-    cross = _expand_group_pairs(spark, sf_dir, gpairs, [F.col("jaccard")])
-    # intra-group pairs: identical texts share every band key and every
-    # shingle, so the per-doc pipeline always paired them at jaccard
-    # exactly 1.0 (inter = na = nb) — PROVIDED the text has >= 1 shingle
-    # (docs under SHINGLE_W words produce no signature and never pair).
-    # Restrict to groups whose rep carries a signature.
-    with_sig = sig.select(F.col("doc_id").alias("gid"))
-    intra = _intra_group_pairs(
-        spark, sf_dir, with_sig, [F.lit(1.0).alias("jaccard")]
+    diagonal = sig.select(
+        F.col("doc_id").alias("ga"),
+        F.col("doc_id").alias("gb"),
+        F.lit(1.0).alias("jaccard"),
     )
-    return cross.unionByName(intra)
+    return verified.unionByName(diagonal)
+
+
+def d02b_minhash_lsh_pairs(spark, sf_dir, rep_shingles=None):
+    # GROUP LEVEL (r22, see _text_groups): candidacy and exact Jaccard are
+    # pure functions of the two TEXTS, so the band join and the shingle
+    # verification run once per distinct text and the verdicts fan back
+    # out to doc pairs at the end
+    return _expand_group_pairs(
+        _rep_jaccard_pairs(spark, sf_dir, rep_shingles),
+        _text_groups(spark, sf_dir),
+        _doc_count(spark, sf_dir),
+        [F.col("jaccard")],
+    )
 
 
 def _d02b_sql() -> str:
@@ -615,19 +621,18 @@ D03B_EXPAND_PARTS = 4
 def d03b_simhash_pairs(spark, sf_dir):
     from pyspark.sql import Window
 
-    # lineage cut before the band self-join (see d02b); its row count —
-    # one per doc with a simhash — sizes the group map m below
+    # lineage cut before the band self-join; its row count — one per doc
+    # with a simhash — sizes the group map m below
     sig, n = materialize(d03_simhash(spark, sf_dir), docs=F.count(F.lit(1)))
     # Run the band self-join once per DISTINCT SIMHASH VALUE, not once per
     # doc: hamming (and hence membership) depends only on the two simhash
     # values, and a near-dup-heavy corpus collapses many docs onto one
     # value (exact duplicates always do) — at the 10×-replicated sf1 synth
     # the band join's pair explosion drops ~100× for the same output.
-    # Shape (same group/expand discipline as d22): group docs by simhash
-    # (window min = group id), band-join the distinct values, hamming-
-    # filter BEFORE fanning back out (only surviving group pairs pay the
-    # expansion joins), then two gid-equi-joins restore doc pairs.
-    # Intra-group pairs are hamming-0 by identity and always survive.
+    # Group docs by simhash (window min = group id), band-join the distinct
+    # values and hamming-filter BEFORE fanning back out (only surviving
+    # group pairs pay the expansion joins). Two docs of one group are
+    # hamming-0 by identity: one diagonal row per group.
     m = sig.withColumn(
         "gid", F.min("doc_id").over(Window.partitionBy("simhash"))
     )
@@ -676,8 +681,15 @@ def d03b_simhash_pairs(spark, sf_dir):
             F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).alias("hamming"),
         )
         .filter(F.col("hamming") <= HAMMING_MAX)
+        .unionByName(
+            reps.select(
+                F.col("gid").alias("ga"),
+                F.col("gid").alias("gb"),
+                F.lit(0).alias("hamming"),
+            )
+        )
     )
-    # the expansion fan-out below is ATOMIC per gpair row (one row emits
+    # the expansion fan-out is ATOMIC per gpair row (one row emits
     # |group_a|×|group_b| pairs) and AQE coalesces the tiny gpairs exchange
     # into a handful of tasks — a few heavy group pairs then serialize the
     # whole expansion (measured: one 14.5s straggler vs 0.6s median on
@@ -685,52 +697,10 @@ def d03b_simhash_pairs(spark, sf_dir):
     # tasks first so heavy rows land apart (guide §2.5: skew —
     # split/spread the hot keys); the exchange itself is distinct-value
     # pairs, orders of magnitude smaller than its fan-out.
-    if D03B_EXPAND_PARTS:
-        gpairs = gpairs.repartition(
-            D03B_EXPAND_PARTS * spark.sparkContext.defaultParallelism
-        )
-    # m leaves the window hash-partitioned by SIMHASH — i.e. every member
-    # of a big group sits in ONE partition, so the intra fan-out below
-    # (each probe row emits |group| rows) would be produced by a handful
-    # of straggler tasks (measured: d35's expansion stage ran at ~3-way
-    # effective parallelism). Spread the PROBE rows by doc_id first — the
-    # per-row output is then Σ|group| per task, uniform (guide §2.5).
-    m_spread = m.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    ma = m_spread.select(F.col("gid").alias("ga"), F.col("doc_id").alias("xa"))
-    mb = m_spread.select(F.col("gid").alias("gb"), F.col("doc_id").alias("xb"))
-    # The doc→group map is 2 longs/doc; broadcast it into the expansion
-    # joins whenever it fits (observed count, same cap as d02b's reduction)
-    # so the EXPANDED pair stream — orders of magnitude bigger than its
-    # inputs — is produced map-side and never re-shuffled. Without the
-    # explicit hint the map sits behind a checkpoint (unknown stats) and a
-    # composed plan (d35) falls back to sort-merge, re-exchanging the full
-    # 157M-row intermediate. Past the cap the joins shuffle — correct,
-    # just not broadcast-accelerated (AQE skew-split applies there).
-    small = n["docs"] <= SEMIJOIN_MAX_BROADCAST_ROWS
-    build_a = F.broadcast(ma) if small else ma
-    build_b = F.broadcast(mb) if small else mb
-    cross = (
-        gpairs.join(build_a, "ga")
-        .join(build_b, "gb")
-        .select(
-            F.least("xa", "xb").alias("da"),
-            F.greatest("xa", "xb").alias("db"),
-            "hamming",
-        )
+    gpairs = gpairs.repartition(
+        D03B_EXPAND_PARTS * spark.sparkContext.defaultParallelism
     )
-    intra = (
-        ma.join(
-            build_b.withColumnRenamed("gb", "ga"),
-            "ga",
-        )
-        .filter(F.col("xa") < F.col("xb"))
-        .select(
-            F.col("xa").alias("da"),
-            F.col("xb").alias("db"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-    )
-    return cross.unionByName(intra)
+    return _expand_group_pairs(gpairs, m, n["docs"], [F.col("hamming")])
 
 
 def _d03b_sql() -> str:
@@ -755,26 +725,25 @@ FREQ_CAP = 50  # drop shingles present in more docs than this (skew guard)
 MIN_SHARED = 2
 
 
-def d04_ngram_jaccard(spark, sf_dir, shingles=None):
-    # GROUP LEVEL (r22, see d02b/_text_groups): the shared-shingle count
-    # and Jaccard depend only on the two texts and the GLOBAL document
+def d04_ngram_jaccard(spark, sf_dir, rep_shingles=None):
+    # GROUP LEVEL (r22, see _text_groups): the shared-shingle count and
+    # Jaccard depend only on the two texts and the GLOBAL document
     # frequency of each shingle, so the self-join runs once per distinct
-    # text and fans back out at the end. ``shingles`` (when passed by the
-    # d35 ensemble) is the REP-level distinct shingle table.
+    # text and fans back out at the end. ``rep_shingles`` (when passed by
+    # the d35 ensemble) is the REP-level distinct shingle table.
     sh = (
-        shingles
-        if shingles is not None
+        rep_shingles
+        if rep_shingles is not None
         else _shingles_of(_rep_docs(spark, sf_dir))
     )
     m = _text_groups(spark, sf_dir)
-    gsize = m.groupBy("gid").agg(F.count("*").alias("gn"))
     # document frequency of s = Σ group sizes over the groups whose text
     # contains s (each rep row stands for gn identical docs) — identical
-    # to the per-doc count. The group-size table is 2 longs/group;
-    # broadcast it under the cap.
-    gsz = gsize.withColumnRenamed("gid", "doc_id")
-    if _rep_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS:
-        gsz = F.broadcast(gsz)
+    # to the per-doc count. The group-size table is 2 longs/group.
+    gsz = _bounded_broadcast(
+        m.groupBy(F.col("gid").alias("doc_id")).agg(F.count("*").alias("gn")),
+        _rep_count(spark, sf_dir),
+    )
     # drop ultra-common shingles via ANTI-join against the COMMON set: the
     # common side (df > cap) is tiny and bounded at any corpus size, while
     # a broadcast of the rare vocabulary would grow with the corpus
@@ -786,28 +755,31 @@ def d04_ngram_jaccard(spark, sf_dir, shingles=None):
         .filter(F.col("df") > FREQ_CAP)
         .select("s")
     )
-    sh_r = sh.join(F.broadcast(common), "s", "left_anti")
+    sh_r = sh.join(F.broadcast(common), "s", "left_anti")  # bound: only shingles with df > FREQ_CAP
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    # ga <= gb: the diagonal row of a text counts each of its rare
+    # shingles once — identical texts share exactly their own rare
+    # shingles, which is what the per-doc join counted for them
     ginter = (
         sh_r.alias("x")
         .join(sh_r.alias("y"), F.col("x.s") == F.col("y.s"))
-        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
-        .groupBy(F.col("x.doc_id").alias("da"), F.col("y.doc_id").alias("db"))
+        .filter(F.col("x.doc_id") <= F.col("y.doc_id"))
+        .groupBy(F.col("x.doc_id").alias("ga"), F.col("y.doc_id").alias("gb"))
         .agg(F.count("*").alias("shared"))
         .filter(F.col("shared") >= MIN_SHARED)
     )
     gpairs = (
         ginter.join(
-            sizes.withColumnRenamed("doc_id", "da").withColumnRenamed("n", "na"),
-            "da",
+            sizes.withColumnRenamed("doc_id", "ga").withColumnRenamed("n", "na"),
+            "ga",
         )
         .join(
-            sizes.withColumnRenamed("doc_id", "db").withColumnRenamed("n", "nb"),
-            "db",
+            sizes.withColumnRenamed("doc_id", "gb").withColumnRenamed("n", "nb"),
+            "gb",
         )
         .select(
-            F.col("da").alias("ga"),
-            F.col("db").alias("gb"),
+            "ga",
+            "gb",
             "shared",
             _r(
                 F.col("shared") / (F.col("na") + F.col("nb") - F.col("shared")),
@@ -815,31 +787,9 @@ def d04_ngram_jaccard(spark, sf_dir, shingles=None):
             ).alias("jaccard"),
         )
     )
-    cross = _expand_group_pairs(
-        spark, sf_dir, gpairs, [F.col("shared"), F.col("jaccard")]
+    return _expand_group_pairs(
+        gpairs, m, _doc_count(spark, sf_dir), [F.col("shared"), F.col("jaccard")]
     )
-    # intra-group pairs: identical texts share exactly their own rare
-    # shingles, so the per-doc join emitted them with shared = |rare(text)|
-    # and jaccard = shared / (2n - shared) — but only when the text has
-    # >= MIN_SHARED rare shingles.
-    rare_n = (
-        sh_r.groupBy(F.col("doc_id").alias("gid"))
-        .agg(F.count("*").alias("shared"))
-        .filter(F.col("shared") >= MIN_SHARED)
-    )
-    intra_g = rare_n.join(
-        sizes.withColumnRenamed("doc_id", "gid"), "gid"
-    ).select(
-        "gid",
-        "shared",
-        _r(
-            F.col("shared") / (F.col("n") + F.col("n") - F.col("shared")), 6
-        ).alias("jaccard"),
-    )
-    intra = _intra_group_pairs(
-        spark, sf_dir, intra_g, [F.col("shared"), F.col("jaccard")]
-    )
-    return cross.unionByName(intra)
 
 
 _D04_SQL = f"""
@@ -1078,7 +1028,7 @@ def d22_editdist_neardup(spark, sf_dir):
         .filter(F.col("bn") > D22_BLOCK_CAP)
         .select("bk")
     )
-    p = p.join(F.broadcast(bad), "bk", "left_anti")
+    p = p.join(F.broadcast(bad), "bk", "left_anti")  # bound: <= |docs| / D22_BLOCK_CAP blocks
     # Run the quadratic Levenshtein DP once per DISTINCT-PREFIX pair, not
     # once per doc pair: dist(a, b) depends only on (pfx_a, pfx_b), and a
     # near-dup-heavy corpus (the regime this operator exists for) has many
@@ -1106,31 +1056,12 @@ def d22_editdist_neardup(spark, sf_dir):
         )
         .filter(F.col("dist") >= 0)
     )
-    ma = m.select(F.col("gid").alias("ga"), F.col("doc_id").alias("xa"))
-    mb = m.select(F.col("gid").alias("gb"), F.col("doc_id").alias("xb"))
-    # see d03b: broadcast the 2-long-per-doc group map into the expansion
-    # joins when it fits, so the fanned-out pair stream is produced
-    # map-side instead of being re-exchanged by a sort-merge fallback. The
-    # map is never materialized, so its size is a plain document count
-    # (a parquet-statistics job, memoized per session)
+    # the map is never materialized, so its size bound is a plain document
+    # count (a parquet-statistics job, memoized per session)
     n_docs = memoized(
         spark, sf_dir, "doc_count", lambda: _t(spark, sf_dir, "documents").count()
     )
-    if n_docs <= SEMIJOIN_MAX_BROADCAST_ROWS:
-        ma, mb = F.broadcast(ma), F.broadcast(mb)
-    return (
-        rep_pairs.join(ma, "ga")
-        .join(mb, "gb")
-        # distinct groups: every cross pair is one unordered doc pair;
-        # same group (ga == gb): order the pair explicitly to avoid the
-        # (x,y)/(y,x) double and the x=x self-pair
-        .filter((F.col("ga") < F.col("gb")) | (F.col("xa") < F.col("xb")))
-        .select(
-            F.least("xa", "xb").alias("da"),
-            F.greatest("xa", "xb").alias("db"),
-            "dist",
-        )
-    )
+    return _expand_group_pairs(rep_pairs, m, n_docs, [F.col("dist")])
 
 
 _D22_SQL = f"""
@@ -1173,13 +1104,14 @@ SUITE["d04b_ngram_editdist"] = QueryCase(
 # Real curation pipelines pair exact-substring decontamination (d13's
 # 8-gram hits) with NEAR-duplicate decontamination: a training doc that is
 # a light paraphrase of an eval doc shares no long exact gram but has high
-# shingle Jaccard. Same signature/band machinery as d02b, restricted to
-# train x eval candidate pairs. Scale shape: a real eval side is
-# benchmark-sized (MBs against a corpus of TBs), so its band buckets and
-# shingles broadcast — the broadcast bound is |eval|, never |corpus| —
-# and the train side never self-joins: one shuffle for signatures,
-# map-side joins after. (The synthetic 20% split here is far larger than
-# any real benchmark; it exists so the certified output is non-trivial.)
+# shingle Jaccard. Same verified rep pairs as d02b (one band join and one
+# exact-Jaccard pass over all text-group representatives), expanded to
+# train x eval doc pairs only. The band join and the shingle join cover the
+# whole corpus's reps, so their cost grows with |corpus|, not |eval|; the
+# broadcasts are the gated ones of _rep_jaccard_pairs and the group-map
+# build sides of the expansion. (The synthetic 20% split here is far
+# larger than any real benchmark; it exists so the certified output is
+# non-trivial.)
 FUZZY_EVAL_MOD = 5
 FUZZY_EVAL_REM = 2
 
@@ -1187,89 +1119,24 @@ FUZZY_EVAL_REM = 2
 def d26_fuzzy_decontaminate(spark, sf_dir):
     # GROUP LEVEL (r22, see _text_groups): candidacy and Jaccard are pure
     # functions of the two TEXTS; only the train/eval SPLIT is doc-level
-    # (doc_id % MOD). So: run the band join + shingle verification once per
-    # unordered REP pair — INCLUDING the diagonal ga == gb, since a train
-    # doc and an eval doc may share one exact text (jaccard 1.0) — then
-    # expand each verdict to (train member × eval member) in both
-    # directions through the group map. The real-scale shape argument is
-    # unchanged (an eval side is benchmark-sized), and on a dup-heavy
-    # corpus the shingle join work drops by the duplication factor².
-    sig = _rep_signature_df(spark, sf_dir)  # checkpointed + memoized
-    buckets = None
-    for b in range(N_BANDS):
-        one = sig.select(
-            "doc_id", F.col(f"band{b}").alias("key"), F.lit(b).alias("band")
-        )
-        buckets = one if buckets is None else buckets.union(one)
-    a = buckets.alias("a")
-    bb = buckets.alias("b")
-    # output-bounded band collisions, referenced twice below (semi probe +
-    # final join): cut the band-join lineage once
-    gcand, _ = materialize(
-        a.join(
-            F.broadcast(bb),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") <= F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("ga"), F.col("b.doc_id").alias("gb"))
-        .distinct()
-    )
-    sh = _shingles_of(_rep_docs(spark, sf_dir))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    pair_stream = (
-        sh.alias("x")
-        .join(sh.alias("y"), F.col("x.s") == F.col("y.s"))
-        .filter(F.col("x.doc_id") <= F.col("y.doc_id"))
-        .select(F.col("x.doc_id").alias("ga"), F.col("y.doc_id").alias("gb"))
-    )
-    # pair-level reduction before the aggregate exchange, as in d02b
-    gcand_probe = (
-        F.broadcast(gcand)
-        if _rep_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS
-        else gcand
-    )
-    ginter = (
-        pair_stream.join(gcand_probe, ["ga", "gb"], "left_semi")
-        .groupBy("ga", "gb")
-        .agg(F.count("*").alias("inter"))
-    )
-    gpairs = (
-        gcand.join(ginter, ["ga", "gb"])
-        .join(sizes.withColumnRenamed("doc_id", "ga").withColumnRenamed("n", "na"), "ga")
-        .join(sizes.withColumnRenamed("doc_id", "gb").withColumnRenamed("n", "nb"), "gb")
-        .select(
-            "ga",
-            "gb",
-            _r(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")),
-                6,
-            ).alias("jaccard"),
+    # (doc_id % MOD). Each rep pair (ga <= gb) pairs the train members of
+    # ga with the eval members of gb; its swapped copy (ga < gb only) the
+    # train members of gb with the eval members of ga. The diagonal row
+    # pairs a train doc with an eval doc of the same text at jaccard 1.0.
+    g = _rep_jaccard_pairs(spark, sf_dir)
+    both = g.unionByName(
+        g.filter(F.col("ga") < F.col("gb")).select(
+            F.col("gb").alias("ga"), F.col("ga").alias("gb"), "jaccard"
         )
     )
-    # expansion: train members of one group × eval members of the other,
-    # both directions for distinct groups, once for the diagonal
-    m = _text_groups(spark, sf_dir)
     is_eval = F.col("doc_id") % FUZZY_EVAL_MOD == FUZZY_EVAL_REM
-    mt = m.where(~is_eval).select("gid", F.col("doc_id").alias("train_id"))
-    me = m.where(is_eval).select("gid", F.col("doc_id").alias("eval_id"))
-    fits = _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS
-
-    def _bc(df):
-        return F.broadcast(df) if fits else df
-
-    fwd = (
-        gpairs.join(_bc(mt.withColumnRenamed("gid", "ga")), "ga")
-        .join(_bc(me.withColumnRenamed("gid", "gb")), "gb")
-        .select("train_id", "eval_id", "jaccard")
-    )
-    rev = (
-        gpairs.filter(F.col("ga") < F.col("gb"))
-        .join(_bc(mt.withColumnRenamed("gid", "gb")), "gb")
-        .join(_bc(me.withColumnRenamed("gid", "ga")), "ga")
-        .select("train_id", "eval_id", "jaccard")
-    )
-    return fwd.unionByName(rev)
+    return _expand_group_pairs(
+        both,
+        _text_groups(spark, sf_dir),
+        _doc_count(spark, sf_dir),
+        [F.col("jaccard")],
+        sides=(~is_eval, is_eval),
+    ).select(F.col("xa").alias("train_id"), F.col("xb").alias("eval_id"), "jaccard")
 
 
 def _d26_sql() -> str:
@@ -1394,9 +1261,9 @@ SUITE["d12b_components_keepbest"] = QueryCase(
 # with method tags, one groupBy on the pair key. No new shuffle shape;
 # candidate generation stays bucketed in each underlying method.
 #: method → bit tag for the ensemble verdict aggregate. Every member emits
-#: a given (da, db) pair AT MOST ONCE (d02b: distinct candidates inner-
-#: joined to per-pair-unique tables; d03b: disjoint cross/intra sets of
-#: unique pairs; d04: groupBy output), so sum(tag) is a faithful method
+#: a given (da, db) pair AT MOST ONCE (each expands per-group-pair-unique
+#: rows with ga <= gb through _expand_group_pairs, which emits every
+#: unordered doc pair of a group pair once), so sum(tag) is a faithful method
 #: SET — the bit mask replaces count(DISTINCT)/collect_set, which planned
 #: as THREE ObjectHashAggregate passes and TWO full exchanges of the
 #: ~158M-row pair union at sf1 (object-mode agg, no codegen). The mask
@@ -1420,10 +1287,10 @@ def d35_ensemble_neardup(spark, sf_dir):
     # words, not shingles — it keeps its own pass (and its own
     # distinct-simhash grouping, which subsumes identical texts).
     shingles, _ = materialize(_shingles_of(_rep_docs(spark, sf_dir)))
-    mh = d02b_minhash_lsh_pairs(spark, sf_dir, shingles=shingles).select(
+    mh = d02b_minhash_lsh_pairs(spark, sf_dir, rep_shingles=shingles).select(
         "da", "db", F.lit(_D35_TAG["minhash"]).alias("tag")
     )
-    ng = d04_ngram_jaccard(spark, sf_dir, shingles=shingles).select(
+    ng = d04_ngram_jaccard(spark, sf_dir, rep_shingles=shingles).select(
         "da", "db", F.lit(_D35_TAG["ngram"]).alias("tag")
     )
     # A pair can only reach >= 2 methods if minhash or ngram flags it —
@@ -1441,9 +1308,11 @@ def d35_ensemble_neardup(spark, sf_dir):
     # join shuffles both sides — still |small| + one pass over sh, never an
     # aggregate of sh.
     # referenced twice (semi-join probe + final left join): cut the full
-    # minhash+ngram lineage once instead of executing it per reference
-    small, _ = materialize(
-        mh.unionByName(ng).groupBy("da", "db").agg(F.sum("tag").alias("mask_s"))
+    # minhash+ngram lineage once instead of executing it per reference; the
+    # same job observes its pair count, which bounds `hits` below
+    small, c = materialize(
+        mh.unionByName(ng).groupBy("da", "db").agg(F.sum("tag").alias("mask_s")),
+        pairs=F.count(F.lit(1)),
     )
     # Simhash membership WITHOUT materializing d03b's pair stream: with 4
     # byte-bands and HAMMING_MAX = 3, pigeonhole guarantees every
@@ -1462,11 +1331,10 @@ def d35_ensemble_neardup(spark, sf_dir):
     rsim = _simhashes_of(_rep_docs(spark, sf_dir)).withColumnRenamed(
         "doc_id", "gid"
     )
-    fits = _doc_count(spark, sf_dir) <= SEMIJOIN_MAX_BROADCAST_ROWS
-    doc_sim = m.join(F.broadcast(rsim) if fits else rsim, "gid").select(
-        "doc_id", "simhash"
-    )
-    sim_b = F.broadcast(doc_sim) if fits else doc_sim
+    doc_sim = m.join(
+        _bounded_broadcast(rsim, _rep_count(spark, sf_dir)), "gid"
+    ).select("doc_id", "simhash")
+    sim_b = _bounded_broadcast(doc_sim, _doc_count(spark, sf_dir))
     hits = (
         small.select("da", "db")
         .join(sim_b.select(F.col("doc_id").alias("da"), F.col("simhash").alias("ha")), "da")
@@ -1480,7 +1348,7 @@ def d35_ensemble_neardup(spark, sf_dir):
     # is 1 row/doc, so `hits` is per-pair unique and the left join below
     # adds the simhash bit exactly once.
     agg = small.join(
-        F.broadcast(hits) if fits else hits, ["da", "db"], "left"
+        _bounded_broadcast(hits, c["pairs"]), ["da", "db"], "left"
     ).select(
         "da",
         "db",

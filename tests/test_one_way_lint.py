@@ -1,7 +1,9 @@
-"""One way to cut lineage and memoize: a static scan of the operator
-modules (in the style of core.dialect_lint) that fails on a hand-written
-``localCheckpoint(`` call or a module-level memo dict. Both go through
-``core.memo.materialize`` / ``core.memo.memoized``."""
+"""One way to cut lineage, memoize and gate a broadcast: a static scan of
+the operator modules (in the style of core.dialect_lint) that fails on a
+hand-written ``localCheckpoint(`` call or a module-level memo dict — both
+go through ``core.memo.materialize`` / ``core.memo.memoized`` — and on an
+``F.broadcast(`` in ``llm/dedup.py`` outside its one gate,
+``_bounded_broadcast``, unless the line notes why the table stays small."""
 
 from __future__ import annotations
 
@@ -82,4 +84,56 @@ def test_linter_catches_both_shapes():
         (2, "module-level memo dict"),
         (3, "module-level memo dict"),
         (8, "localCheckpoint( call"),
+    ]
+
+
+#: module whose broadcasts all go through its one gate
+GATED = "llm/dedup.py"
+GATE = "_bounded_broadcast"
+
+
+def broadcast_violations(src: str):
+    """``F.broadcast(`` calls outside ``GATE`` whose line carries no
+    ``# bound:`` comment giving the reason the table is small."""
+    notes = {
+        tok.start[0]
+        for tok in tokenize.generate_tokens(io.StringIO(src).readline)
+        if tok.type == tokenize.COMMENT and tok.string.startswith("# bound:")
+    }
+    out, fn = [], None
+    for n, line in enumerate(_code(src).splitlines(), 1):
+        if line[:1].strip():  # a top-level statement ends the previous def
+            d = re.match(r"def\s+(\w+)", line)
+            fn = d.group(1) if d else None
+        if "F.broadcast(" in line and fn != GATE and n not in notes:
+            out.append((n, "ungated F.broadcast("))
+    return out
+
+
+def test_dedup_broadcasts_go_through_the_gate():
+    with open(os.path.join(PKG, GATED), encoding="utf-8") as f:
+        found = broadcast_violations(f.read())
+    assert not found, f"{GATED}: {found} — use {GATE}(df, rows) or add a # bound: note"
+
+
+def test_broadcast_rule_flags_ungated_calls():
+    src = (
+        "def _bounded_broadcast(df, rows):\n"
+        "    return F.broadcast(df) if rows <= CAP else df\n"
+        "def d(df, n):\n"
+        "    a = F.broadcast(df)\n"
+        "    b = F.broadcast(df)  # bound: one row per month\n"
+        "    # F.broadcast(df) in a comment is fine\n"
+        "    c = F.broadcast(df) if n <= CAP else df\n"
+        "    s = 'F.broadcast( in a string is fine'\n"
+        "    return F.broadcast(df), '# bound: in a string is no note'\n"
+        "X = F.broadcast\n"
+        "def e(df):\n"
+        "    return F.broadcast(df)\n"
+    )
+    assert broadcast_violations(src) == [
+        (4, "ungated F.broadcast("),
+        (7, "ungated F.broadcast("),
+        (9, "ungated F.broadcast("),
+        (12, "ungated F.broadcast("),
     ]
