@@ -381,21 +381,11 @@ class MongoDBTableFactory(_SparkFactory):
 
     def get_table(self, table_reference: str) -> DataFrame:
         from datafusion_table_providers_spark.sources.mongodb_source import (
-            HAS_PYMONGO,
+            mongo_reader_df,
         )
 
-        if not HAS_PYMONGO:
-            raise ImportError("pymongo is required for MongoDBTableFactory")
-        from datafusion_table_providers_spark.sources import mongodb_source
-
-        spark = self._session()
-        spark.dataSource.register(mongodb_source.MongoDataSource)
-        return (
-            spark.read.format("mongodb_engine")
-            .option("uri", self.uri)
-            .option("database", self.database)
-            .option("collection", table_reference)
-            .load()
+        return mongo_reader_df(
+            self._session(), self.uri, self.database, table_reference
         )
 
 

@@ -8,17 +8,21 @@ path synthesized ``jdbc:odbc:`` / ``jdbc:adbc:`` URLs, which no modern JVM
 can load a driver for (the JDBC-ODBC bridge died with Java 8); this module
 replaces that with a real transport: any importable DB-API module — pyodbc,
 adbc_driver_manager.dbapi, psycopg, mysqlclient, or stdlib sqlite3 — opened
-*inside the executor task*, no JVM jar involved.
+*inside the executor task*, no JVM jar involved. Pushdown, projection, range
+slices and SQL generation come from the shared ``sources/sql_scan.py``; the
+SQLite connector (``sources/sqlite_source.py``) is this reader over stdlib
+``sqlite3`` with a ``PRAGMA``-declared schema.
 
 Batches are produced Arrow-native when the driver cursor supports it
 (ADBC ``fetch_arrow_table``, turbodbc ``fetchallarrow``), else by chunked
 ``fetchmany`` → columnar conversion against the declared schema — the
 ``rows_to_arrow`` analog (crates/postgres/src/arrow_sql_gen/mod.rs:248).
 
-Schema comes from (in order): an explicit ``schema_ddl`` option (the
-declared-DDL factory mode, crates/duckdb/src/lib.rs:419-560), an Arrow
-cursor schema, or ``cursor.description`` + a sampled row (introspection
-mode, dbconnection.rs:216-239).
+Schema comes from (in order): a declared ``schema_ddl`` (DDL text or a
+``StructType``, the declared-DDL factory mode, crates/duckdb/src/
+lib.rs:419-560), handed to ``DataFrameReader.schema`` on the driver; else,
+in a planning worker, an Arrow cursor schema or ``cursor.description`` + a
+sampled row (introspection mode, dbconnection.rs:216-239).
 """
 
 from __future__ import annotations
@@ -27,17 +31,19 @@ import datetime as dt
 import decimal
 import importlib
 import json
-from typing import Iterator, List, Optional
+from typing import Iterator, List, Optional, Union
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.datasource import DataSource, DataSourceReader
 
-from datafusion_table_providers_spark.core.expr import (
-    DIALECTS,
-    build_select,
-    translate_filters,
+from datafusion_table_providers_spark.core.expr import DIALECTS, build_select
+from datafusion_table_providers_spark.sources import register
+from datafusion_table_providers_spark.sources.sql_scan import (
+    SqlScanReader,
+    hint_if_small,
+    range_slices,
 )
 
 
@@ -72,6 +78,15 @@ def _spark_to_arrow(dtype: T.DataType) -> pa.DataType:
     return pa.string()
 
 
+def _column(values, typ: pa.DataType) -> pa.Array:
+    """One fetched column as Arrow. Drivers without a boolean type (sqlite3)
+    return 1/0 for a declared BOOLEAN, which Arrow does not convert; NULL
+    stays null."""
+    if pa.types.is_boolean(typ):
+        values = [None if v is None else bool(v) for v in values]
+    return pa.array(values, type=typ)
+
+
 def _infer_spark_type(sample) -> T.DataType:
     if isinstance(sample, bool):
         return T.BooleanType()
@@ -90,50 +105,10 @@ def _infer_spark_type(sample) -> T.DataType:
     return T.StringType()
 
 
-class _Slice(InputPartition):
-    """A range-partition slice: one disjoint WHERE fragment per task."""
-
-    def __init__(self, idx: int, clause: Optional[str]):
-        super().__init__(idx)
-        self.clause = clause
-
-
-class DBAPIReader(DataSourceReader):
-    def __init__(self, schema, options):
-        self.spark_schema = schema
-        self.options = options
-        self.relation = options["relation"]
-        self.dialect = DIALECTS[options.get("dialect", "odbc")]
-        self.where: List[str] = []
-        # runtime semi-join reduction fragments (sources/dynamic_filter.py)
-        self.where.extend(json.loads(options.get("extra_where", "[]")))
-        self.columns = json.loads(options.get("columns", "null"))
-        self.batch_size = int(options.get("batch_size", "16384"))
-        self._partition_clauses = json.loads(
-            options.get("partition_clauses", "[]")
-        )
-
-    def pushFilters(self, filters):
-        # conservative ANSI dialect by default: only filters whose rendering
-        # is portable are pushed Exact; the rest stay Spark-side
-        clauses, unsupported = translate_filters(filters, self.dialect)
-        self.where.extend(clauses)
-        return iter(unsupported)
-
-    def partitions(self):
-        if self._partition_clauses:
-            return [
-                _Slice(i, c) for i, c in enumerate(self._partition_clauses)
-            ]
-        return [_Slice(0, None)]
-
-    def scan_sql(self, partition=None) -> str:
-        where = list(self.where)
-        if partition is not None and getattr(partition, "clause", None):
-            where.append(partition.clause)
-        return build_select(
-            self.dialect, self.relation, columns=self.columns, where=where
-        )
+class DBAPIReader(SqlScanReader):
+    # conservative ANSI dialect by default: only filters whose rendering
+    # is portable are pushed Exact; the rest stay Spark-side
+    DIALECT = "odbc"
 
     def read(self, partition) -> Iterator[pa.RecordBatch]:
         con = _connect(self.options)
@@ -154,16 +129,13 @@ class DBAPIReader(DataSourceReader):
                 for batch in cur.fetchallarrow().cast(target).to_batches():
                     yield batch
                 return
+            batch_size = int(self.options.get("batch_size", "16384"))
             while True:
-                rows = cur.fetchmany(self.batch_size)
+                rows = cur.fetchmany(batch_size)
                 if not rows:
                     break
-                cols = list(zip(*rows))
                 yield pa.record_batch(
-                    [
-                        pa.array(list(col), type=f.type)
-                        for col, f in zip(cols, target)
-                    ],
+                    [_column(col, f.type) for col, f in zip(zip(*rows), target)],
                     schema=target,
                 )
         finally:
@@ -180,8 +152,9 @@ class DBAPIDataSource(DataSource):
     - ``dialect``: SQL dialect for generated statements (default "odbc" =
       conservative ANSI)
     - ``columns``: JSON list → pruned projection (A3)
-    - ``schema_json``: optional StructType JSON (declared schema) —
-      skips introspection; ``dbapi_reader_df`` accepts DDL and encodes it
+
+    A declared schema (``dbapi_reader_df(schema_ddl=...)``) reaches Spark
+    through ``DataFrameReader.schema``, so ``schema`` below only introspects.
     """
 
     @classmethod
@@ -189,17 +162,7 @@ class DBAPIDataSource(DataSource):
         return "dbapi_engine"
 
     def schema(self):
-        # declared schema travels as StructType JSON: this method runs in a
-        # session-less planning worker where DDL parsing (a JVM call) would
-        # fail — dbapi_reader_df parses DDL driver-side and re-encodes
-        schema_json = self.options.get("schema_json")
         cols = json.loads(self.options.get("columns", "null"))
-        if schema_json:
-            struct = T.StructType.fromJson(json.loads(schema_json))
-            if cols:
-                by_name = {f.name: f for f in struct.fields}
-                return T.StructType([by_name[c] for c in cols])
-            return struct
         dialect = DIALECTS[self.options.get("dialect", "odbc")]
         proj = ", ".join(dialect.quote_ident(c) for c in cols) if cols else "*"
         con = _connect(self.options)
@@ -237,15 +200,6 @@ class DBAPIDataSource(DataSource):
 
     def reader(self, schema) -> DataSourceReader:
         return DBAPIReader(schema, self.options)
-
-
-_REGISTERED = set()
-
-
-def register(spark: SparkSession) -> None:
-    if id(spark) not in _REGISTERED:
-        spark.dataSource.register(DBAPIDataSource)
-        _REGISTERED.add(id(spark))
 
 
 def postgres_declared_schema(
@@ -306,14 +260,19 @@ def dbapi_reader_df(
     connect_kwargs: Optional[dict] = None,
     dialect: str = "odbc",
     columns: Optional[List[str]] = None,
-    schema_ddl: Optional[str] = None,
+    schema_ddl: Union[str, T.StructType, None] = None,
     partition_column: Optional[str] = None,
     num_partitions: int = 1,
     auto_broadcast: bool = False,
     extra_where: Optional[List[str]] = None,
 ) -> DataFrame:
-    """When ``partition_column`` (numeric) is set with ``num_partitions>1``,
-    MIN/MAX bounds are introspected once driver-side over the same DB-API
+    """``schema_ddl`` declares the relation's schema, as DDL text or a
+    ``StructType`` (what ``DataFrameReader.schema`` accepts); it is projected
+    to ``columns`` here on the driver. Without it the schema is introspected
+    by ``DBAPIDataSource.schema`` in a planning worker.
+
+    When ``partition_column`` (numeric) is set with ``num_partitions>1``,
+    MIN/MAX bounds are introspected once driver-side over a DB-API
     connection and the scan splits into disjoint range slices, each executed
     by its own executor task with its own server connection — the JDBC-style
     parallel read, same discipline as ``duckdb_reader_df``.
@@ -322,71 +281,44 @@ def dbapi_reader_df(
     DB-API connection and attach a broadcast join hint when the relation
     is small (A15 stats → join planning; Python-DS scans otherwise always
     shuffle-join — same contract as ``duckdb_reader_df``)."""
-    register(spark)
-    r = (
-        spark.read.format("dbapi_engine")
-        .option("module", module)
-        .option("relation", relation)
-        .option("dialect", dialect)
-        .option("connect_args", json.dumps(connect_args or []))
-        .option("connect_kwargs", json.dumps(connect_kwargs or {}))
-    )
+    register(spark, DBAPIDataSource)
+    opts = {
+        "module": module,
+        "relation": relation,
+        "dialect": dialect,
+        "connect_args": json.dumps(connect_args or []),
+        "connect_kwargs": json.dumps(connect_kwargs or {}),
+    }
     if columns:
-        r = r.option("columns", json.dumps(list(columns)))
+        opts["columns"] = json.dumps(list(columns))
     if extra_where:
-        r = r.option("extra_where", json.dumps(list(extra_where)))
+        opts["extra_where"] = json.dumps(list(extra_where))
+    split = partition_column and num_partitions > 1
+    rows = None
+    if split or auto_broadcast:
+        con = _connect(opts)
+        try:
+            cur = con.cursor()
+            if split:
+                q = DIALECTS[dialect].quote_ident(partition_column)
+                cur.execute(f"SELECT MIN({q}), MAX({q}) FROM {relation}")
+                lo, hi = cur.fetchone()
+                opts["partition_clauses"] = json.dumps(
+                    range_slices(q, lo, hi, num_partitions)
+                )
+            if auto_broadcast:
+                cur.execute(f"SELECT COUNT(*) FROM {relation}")
+                rows = int(cur.fetchone()[0])
+        finally:
+            con.close()
+    reader = spark.read.format("dbapi_engine").options(**opts)
     if schema_ddl:
-        struct = T._parse_datatype_string(schema_ddl)  # driver-side: session up
-        r = r.option("schema_json", json.dumps(struct.jsonValue()))
-    if partition_column and num_partitions > 1:
-        d = DIALECTS[dialect]
-        q = d.quote_ident(partition_column)
-        con = _connect(
-            {
-                "module": module,
-                "connect_args": json.dumps(connect_args or []),
-                "connect_kwargs": json.dumps(connect_kwargs or {}),
-            }
+        struct = (
+            schema_ddl
+            if isinstance(schema_ddl, T.StructType)
+            else T._parse_datatype_string(schema_ddl)
         )
-        try:
-            cur = con.cursor()
-            cur.execute(f"SELECT MIN({q}), MAX({q}) FROM {relation}")
-            lo, hi = cur.fetchone()
-        finally:
-            con.close()
-        clauses = []
-        if lo is not None and hi is not None and hi > lo:
-            step = (hi - lo) / num_partitions
-            edges = [lo + step * i for i in range(1, num_partitions)]
-            prev = None
-            for e in edges + [None]:
-                c = []
-                if prev is not None:
-                    c.append(f"{q} >= {prev}")
-                if e is not None:
-                    c.append(f"{q} < {e}")
-                clauses.append(" AND ".join(c) if c else "TRUE")
-                prev = e
-        if clauses:
-            r = r.option("partition_clauses", json.dumps(clauses))
-    hint_broadcast = False
-    if auto_broadcast:
-        from datafusion_table_providers_spark.sources.duckdb_source import (
-            AUTO_BROADCAST_ROWS,
-        )
-
-        con = _connect(
-            {
-                "module": module,
-                "connect_args": json.dumps(connect_args or []),
-                "connect_kwargs": json.dumps(connect_kwargs or {}),
-            }
-        )
-        try:
-            cur = con.cursor()
-            cur.execute(f"SELECT COUNT(*) FROM {relation}")
-            hint_broadcast = int(cur.fetchone()[0]) <= AUTO_BROADCAST_ROWS
-        finally:
-            con.close()
-    df = r.load()
-    return df.hint("broadcast") if hint_broadcast else df
+        if columns:
+            struct = T.StructType([struct[c] for c in columns])
+        reader = reader.schema(struct)
+    return hint_if_small(reader.load(), rows)

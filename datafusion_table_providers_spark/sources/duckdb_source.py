@@ -2,12 +2,11 @@
 
 Reference analog: the DuckDB ``TableProvider`` (crates/duckdb/) built on the
 generic ``SqlTable``/``SqlExec`` (crates/common/src/sql/sql_provider_datafusion/
-mod.rs:70-228). Parity pieces:
+mod.rs:70-228). Pushdown, projection, range slices and SQL generation live
+in that generic part's analog, ``sources/sql_scan.py``, shared with the
+DB-API and SQLite scans; this module adds DuckDB's connection and its
+Arrow read. DuckDB-specific parity pieces:
 
-- generated ``SELECT <proj> FROM rel WHERE <filters> LIMIT n`` pushed to the
-  engine (scan_to_sql, mod.rs:122-134) — here via ``pushFilters`` (exact
-  filters are removed from Spark's plan, the reference's 'Exact' marking,
-  mod.rs:231-247);
 - parquet-backed logical tables registered as ``read_parquet`` views — the
   table-function CTE scan (crates/duckdb/src/sql_table.rs:30-60, A11);
 - per-connection settings (`SET k=v`) — the settings registry
@@ -26,25 +25,20 @@ Arrow batches without driver involvement.
 from __future__ import annotations
 
 import json
-import os
 from typing import Iterator, List, Optional
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.datasource import DataSource, DataSourceReader
 
-from datafusion_table_providers_spark.core.expr import (
-    DIALECTS,
-    build_select,
-    translate_filters,
-)
+from datafusion_table_providers_spark.core.expr import DIALECTS
 from datafusion_table_providers_spark.core.types import arrow_to_spark_schema
-
-
-class RangePartition(InputPartition):
-    def __init__(self, index: int, clause: Optional[str]):
-        self.index = index
-        self.clause = clause
+from datafusion_table_providers_spark.sources import register
+from datafusion_table_providers_spark.sources.sql_scan import (
+    SqlScanReader,
+    hint_if_small,
+    range_slices,
+)
 
 
 #: Per-executor-process connection cache for :memory: parquet-view configs.
@@ -67,8 +61,8 @@ _WORKER_CON_CACHE_MAX = 8
 #: measured 0.89s → 0.73s steady (and 2.7s tail → 0.78s) on the 8-slice
 #: partitioned scan at sf0.1/local[32]. Same discipline as any per-task
 #: native library on a shared executor. Backend ``settings={"threads": ...}``
-#: overrides; so does this env knob for site tuning.
-_TASK_THREADS = os.environ.get("SPARK_GRAFT_DUCKDB_TASK_THREADS", "2")
+#: overrides.
+_TASK_THREADS = "2"
 
 
 def _worker_connect(opts):
@@ -126,59 +120,8 @@ def _worker_connect(opts):
     return con, False
 
 
-class DuckDBReader(DataSourceReader):
-    def __init__(self, schema, options):
-        self.spark_schema = schema
-        self.options = options
-        self.relation = options.get("relation")
-        self.dialect = DIALECTS["duckdb"]
-        self.where: List[str] = []
-        # caller-supplied SQL fragments ANDed into every partition's WHERE —
-        # the runtime semi-join reduction path (sources/dynamic_filter.py)
-        # injects its IN-list / range clause here
-        self.where.extend(json.loads(options.get("extra_where", "[]")))
-        json.loads(options.get("parquet_tables", "{}"))  # validate early
-        self._partition_clauses = json.loads(options.get("partition_clauses", "[]"))
-        # Projection pushdown (reference mod.rs:258-276): the Python DS API
-        # has no pruning hook, so required columns are threaded through the
-        # ``columns`` option (duckdb_reader_df / Engine.register_backend_table)
-        # and the generated SELECT names exactly those — never ``*``.
-        self.columns = json.loads(options.get("columns", "null"))
-        # Sort/limit pushdown (reference mod.rs:505-607): caller-directed,
-        # same explicit-option contract as columns. Inexact semantics — the
-        # limit bounds each PARTITION's fetch, and Spark's own TopK/limit
-        # above the scan remains the global truth (the reference keeps the
-        # local SortExec for the same reason, mod.rs:516-585).
-        self.order_by = json.loads(options.get("order_by", "null"))
-        self.limit = options.get("limit")
-
-    def pushFilters(self, filters):
-        """Exact/unsupported split (reference mod.rs:231-247): clauses we
-        translate are evaluated remotely and dropped from Spark's plan."""
-        clauses, unsupported = translate_filters(filters, self.dialect)
-        self.where.extend(clauses)
-        return iter(unsupported)
-
-    def partitions(self):
-        if self._partition_clauses:
-            return [
-                RangePartition(i, c) for i, c in enumerate(self._partition_clauses)
-            ]
-        return [RangePartition(0, None)]
-
-    def scan_sql(self, partition=None) -> str:
-        """The exact SQL one partition sends to the engine (test surface)."""
-        where = list(self.where)
-        if partition is not None and getattr(partition, "clause", None):
-            where.append(partition.clause)
-        return build_select(
-            self.dialect,
-            self.relation,
-            columns=self.columns,
-            where=where,
-            order_by=self.order_by or (),
-            limit=int(self.limit) if self.limit is not None else None,
-        )
+class DuckDBReader(SqlScanReader):
+    DIALECT = "duckdb"
 
     def read(self, partition) -> Iterator[pa.RecordBatch]:
         con, cached = _worker_connect(self.options)
@@ -269,15 +212,6 @@ class DuckDBDataSource(DataSource):
         return DuckDBReader(schema, self.options)
 
 
-_REGISTERED = set()
-
-
-def register(spark: SparkSession) -> None:
-    if id(spark) not in _REGISTERED:
-        spark.dataSource.register(DuckDBDataSource)
-        _REGISTERED.add(id(spark))
-
-
 def table_row_count(backend, relation: str) -> int:
     """Row-count statistic for a backend relation (reference A15,
     crates/flightsql/src/lib.rs:343-349 reports these to the optimizer).
@@ -291,14 +225,6 @@ def table_row_count(backend, relation: str) -> int:
 #: small enough that a slice's Arrow transfer fits comfortably in one task,
 #: large enough that per-task connection setup amortizes
 AUTO_PARTITION_ROWS = 1_000_000
-
-#: below this row-count statistic an ``auto_broadcast`` scan attaches a
-#: broadcast join hint. Python DataSource scans report only the session's
-#: default sizeInBytes to Catalyst (no stats hook — A15), so without the
-#: hint Spark NEVER auto-broadcasts a connector table and every
-#: connector-dim join pays a full shuffle. 500k rows of a typical dim is
-#: well under the ~8 GB broadcast-table ceiling.
-AUTO_BROADCAST_ROWS = 500_000
 
 
 def duckdb_reader_df(
@@ -338,7 +264,21 @@ def duckdb_reader_df(
     partition the limit bounds each slice, so keep Spark's own
     ``.orderBy().limit()`` above the scan as the global truth — exactly the
     reference's kept-local-TopK discipline."""
-    register(spark)
+    register(spark, DuckDBDataSource)
+    if (
+        backend.path == ":memory:"
+        and not backend.parquet_tables
+        and "(" not in relation
+    ):
+        # A plain table name in a :memory: DB is invisible to executor
+        # processes. Table-FUNCTION relations (read_csv(...), read_json(...),
+        # read_parquet(...) — the reference's A10/A11 surface) are file-backed
+        # and scan fine from any process, so they pass through.
+        raise ValueError(
+            "in-memory DuckDB tables are not visible to executor processes; "
+            "use a file-mode backend or parquet-backed tables, or go through "
+            "Engine.sql federation (driver-side Arrow stream)"
+        )
     opts = {
         "path": backend.path,
         "relation": relation,
@@ -354,52 +294,23 @@ def duckdb_reader_df(
         opts["limit"] = str(int(limit))
     if extra_where:
         opts["extra_where"] = json.dumps(list(extra_where))
-    if partition_column and num_partitions is None:
+    # one row count feeds both the auto-sized split and the broadcast hint
+    rows = None
+    if auto_broadcast or (partition_column and num_partitions is None):
         rows = table_row_count(backend, relation)
+    if partition_column and num_partitions is None:
         num_partitions = max(1, min(64, rows // AUTO_PARTITION_ROWS + 1))
-        if backend.path != ":memory:":
-            backend.close()  # release the RW lock the count introspection took
-    if (
-        backend.path == ":memory:"
-        and not backend.parquet_tables
-        and "(" not in relation
-    ):
-        # A plain table name in a :memory: DB is invisible to executor
-        # processes. Table-FUNCTION relations (read_csv(...), read_json(...),
-        # read_parquet(...) — the reference's A10/A11 surface) are file-backed
-        # and scan fine from any process, so they pass through.
-        raise ValueError(
-            "in-memory DuckDB tables are not visible to executor processes; "
-            "use a file-mode backend or parquet-backed tables, or go through "
-            "Engine.sql federation (driver-side Arrow stream)"
-        )
     if partition_column and num_partitions > 1:
         q = backend.dialect.quote_ident(partition_column)
         bounds = backend.query_arrow(
             f"SELECT MIN({q}) AS lo, MAX({q}) AS hi FROM {relation}"
         ).to_pylist()[0]
-        if backend.path != ":memory:":
-            backend.close()  # release RW lock before executors open read-only
-        lo, hi = bounds["lo"], bounds["hi"]
-        clauses = []
-        if lo is not None and hi is not None and hi > lo:
-            step = (hi - lo) / num_partitions
-            edges = [lo + step * i for i in range(1, num_partitions)]
-            prev = None
-            for e in edges + [None]:
-                c = []
-                if prev is not None:
-                    c.append(f"{q} >= {prev}")
-                if e is not None:
-                    c.append(f"{q} < {e}")
-                clauses.append(" AND ".join(c) if c else "TRUE")
-                prev = e
-        opts["partition_clauses"] = json.dumps(clauses)
-    hint_broadcast = False
-    if auto_broadcast:
-        hint_broadcast = table_row_count(backend, relation) <= AUTO_BROADCAST_ROWS
-        if backend.path != ":memory:":
-            backend.close()  # release the RW lock the count took
+        opts["partition_clauses"] = json.dumps(
+            range_slices(q, bounds["lo"], bounds["hi"], num_partitions)
+        )
+    queried = rows is not None or "partition_clauses" in opts
+    if queried and backend.path != ":memory:":
+        backend.close()  # release the RW lock the driver-side queries took
     reader = spark.read.format("duckdb_engine").options(**opts)
     if backend.path == ":memory:":
         # Resolve the schema with ONE in-process LIMIT-0 probe instead of
@@ -413,5 +324,4 @@ def duckdb_reader_df(
                 lambda sql: backend.query_arrow(sql).schema, relation, columns
             )
         )
-    df = reader.load()
-    return df.hint("broadcast") if hint_broadcast else df
+    return hint_if_small(reader.load(), rows if auto_broadcast else None)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from datafusion_table_providers_spark.core.types import arrow_to_spark_schema
+from datafusion_table_providers_spark.sources import register
 
 
 class FlightEndpointPartition(InputPartition):
@@ -139,20 +140,11 @@ class FlightDataSource(DataSource):
         return FlightReader(schema, self.options)
 
 
-_REGISTERED = set()
-
-
-def register(spark: SparkSession) -> None:
-    if id(spark) not in _REGISTERED:
-        spark.dataSource.register(FlightDataSource)
-        _REGISTERED.add(id(spark))
-
-
 def flight_reader_df(
     spark: SparkSession, location: str, query: str = None, path: str = None,
     headers: dict = None,
 ) -> DataFrame:
-    register(spark)
+    register(spark, FlightDataSource)
     r = spark.read.format("flight_engine").option("location", location)
     if query is not None:
         r = r.option("query", query)

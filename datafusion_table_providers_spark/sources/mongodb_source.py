@@ -24,6 +24,8 @@ from typing import Any, Dict, Iterator, List, Optional, Tuple
 
 from pyspark.sql import types as T
 
+from datafusion_table_providers_spark.sources import register
+
 # ---------------------------------------------------------------------------
 # Filter → BSON find document (expression.rs:43-380)
 
@@ -282,13 +284,6 @@ if HAS_PYMONGO:  # pragma: no cover
         def reader(self, schema) -> DataSourceReader:
             return MongoReader(schema, self.options)
 
-    _REGISTERED = set()
-
-    def register(spark) -> None:
-        if id(spark) not in _REGISTERED:
-            spark.dataSource.register(MongoDataSource)
-            _REGISTERED.add(id(spark))
-
 
 def mongo_reader_df(
     spark,
@@ -307,7 +302,7 @@ def mongo_reader_df(
     per-row Python)."""
     if not HAS_PYMONGO:  # pragma: no cover - environment-dependent
         raise ImportError("mongo_reader_df requires pymongo")
-    register(spark)
+    register(spark, MongoDataSource)
     df = (
         spark.read.format("mongodb_engine")
         .option("uri", uri)

@@ -98,7 +98,3 @@ class FlightStreamDataSource(DataSource):
 
     def simpleStreamReader(self, schema) -> FlightStreamReader:
         return FlightStreamReader(self.options)
-
-
-def register(spark) -> None:
-    spark.dataSource.register(FlightStreamDataSource)

@@ -41,9 +41,12 @@ def cursor_server():
 
 
 def test_flight_stream_delivers_all_rows(spark, cursor_server, tmp_path):
-    from datafusion_table_providers_spark.streaming.flight_stream import register
+    from datafusion_table_providers_spark.sources import register
+    from datafusion_table_providers_spark.streaming.flight_stream import (
+        FlightStreamDataSource,
+    )
 
-    register(spark)
+    register(spark, FlightStreamDataSource)
     stream = (
         spark.readStream.format("flight_stream")
         .option("location", f"grpc://127.0.0.1:{cursor_server.port}")

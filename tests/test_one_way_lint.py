@@ -3,7 +3,12 @@ the operator modules (in the style of core.dialect_lint) that fails on a
 hand-written ``localCheckpoint(`` call or a module-level memo dict — both
 go through ``core.memo.materialize`` / ``core.memo.memoized`` — and on an
 ``F.broadcast(`` in ``llm/dedup.py`` outside its one gate,
-``_bounded_broadcast``, unless the line notes why the table stays small."""
+``_bounded_broadcast``, unless the line notes why the table stays small.
+
+One path for the connectors: data sources are registered only by
+``sources.register``, SQL filters are translated only by the shared scan
+reader (``sources/sql_scan.py``), and only that module compares a row count
+with ``AUTO_BROADCAST_ROWS``."""
 
 from __future__ import annotations
 
@@ -137,3 +142,71 @@ def test_broadcast_rule_flags_ungated_calls():
         (9, "ungated F.broadcast("),
         (12, "ungated F.broadcast("),
     ]
+
+
+_CMP = r"(?:[<>]=?|[!=]=)"
+
+#: connector mechanisms with one home each: (pattern, rule, modules allowed)
+ONE_HOME = (
+    (
+        re.compile(r"dataSource\.register\("),
+        "data source registration",
+        ("sources/__init__.py",),
+    ),
+    (
+        re.compile(r"\btranslate_filters\("),
+        "SQL filter translation",
+        ("sources/sql_scan.py", "core/expr.py"),
+    ),
+    (
+        re.compile(rf"AUTO_BROADCAST_ROWS\s*{_CMP}|{_CMP}\s*AUTO_BROADCAST_ROWS"),
+        "auto-broadcast comparison",
+        ("sources/sql_scan.py",),
+    ),
+)
+
+
+def one_home_violations(rel: str, src: str):
+    out = []
+    for n, line in enumerate(_code(src).splitlines(), 1):
+        for pattern, rule, homes in ONE_HOME:
+            if rel not in homes and pattern.search(line):
+                out.append((n, rule))
+    return out
+
+
+def test_connector_mechanisms_have_one_home():
+    found = {}
+    for root, _, files in os.walk(PKG):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(root, f)
+            rel = os.path.relpath(path, PKG).replace(os.sep, "/")
+            with open(path, encoding="utf-8") as fh:
+                hits = one_home_violations(rel, fh.read())
+            if hits:
+                found[rel] = hits
+    assert not found, found
+
+
+def test_one_home_rule_flags_copies():
+    # the shapes of the per-connector copies this rule replaced
+    src = (
+        "def register(spark):\n"
+        "    if id(spark) not in _REGISTERED:\n"
+        "        spark.dataSource.register(DuckDBDataSource)\n"
+        "def pushFilters(self, filters):\n"
+        "    clauses, unsupported = translate_filters(filters, self.dialect)\n"
+        "    # translate_filters(filters, d) in a comment is fine\n"
+        "    s = 'dataSource.register( in a string is fine'\n"
+        "    doc, rest = translate_filters_bson(filters)\n"
+        "    from x import AUTO_BROADCAST_ROWS\n"
+        "    hint = table_row_count(b, r) <= AUTO_BROADCAST_ROWS\n"
+        "    big = AUTO_BROADCAST_ROWS < rows\n"
+    )
+    reg, tr, cmp_ = (rule for _, rule, _ in ONE_HOME)
+    assert one_home_violations("sources/duckdb_source.py", src) == [
+        (3, reg), (5, tr), (10, cmp_), (11, cmp_)
+    ]
+    assert one_home_violations("sources/sql_scan.py", src) == [(3, reg)]
