@@ -78,12 +78,22 @@ def _spark_to_arrow(dtype: T.DataType) -> pa.DataType:
     return pa.string()
 
 
+def _as_bool(v):
+    """Drivers without a boolean type (sqlite3) return 1/0 for a declared
+    BOOLEAN, which Arrow does not convert. Only those two ints become
+    booleans; any other value (text 'false', 2, 0.5) raises rather than
+    reading as True."""
+    if v is None or isinstance(v, bool):
+        return v
+    if isinstance(v, int) and v in (0, 1):
+        return bool(v)
+    raise ValueError(f"not a boolean value in a BOOLEAN column: {v!r}")
+
+
 def _column(values, typ: pa.DataType) -> pa.Array:
-    """One fetched column as Arrow. Drivers without a boolean type (sqlite3)
-    return 1/0 for a declared BOOLEAN, which Arrow does not convert; NULL
-    stays null."""
+    """One fetched column as Arrow; NULL stays null."""
     if pa.types.is_boolean(typ):
-        values = [None if v is None else bool(v) for v in values]
+        values = [_as_bool(v) for v in values]
     return pa.array(values, type=typ)
 
 
@@ -106,9 +116,9 @@ def _infer_spark_type(sample) -> T.DataType:
 
 
 class DBAPIReader(SqlScanReader):
-    # conservative ANSI dialect by default: only filters whose rendering
-    # is portable are pushed Exact; the rest stay Spark-side
-    DIALECT = "odbc"
+    # the ``dialect`` option picks the dialect; the default "odbc" is
+    # conservative ANSI: only filters whose rendering is portable are
+    # pushed Exact, the rest stay Spark-side
 
     def read(self, partition) -> Iterator[pa.RecordBatch]:
         con = _connect(self.options)

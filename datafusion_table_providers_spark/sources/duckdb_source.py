@@ -123,6 +123,14 @@ def _worker_connect(opts):
 class DuckDBReader(SqlScanReader):
     DIALECT = "duckdb"
 
+    def __init__(self, schema, options):
+        super().__init__(schema, options)
+        # Sort/limit pushdown, same explicit-option contract as ``columns``.
+        # Inexact: the limit bounds each PARTITION's fetch, and Spark's own
+        # TopK/limit above the scan stays the global truth.
+        self.order_by = json.loads(options.get("order_by", "null"))
+        self.limit = options.get("limit")
+
     def read(self, partition) -> Iterator[pa.RecordBatch]:
         con, cached = _worker_connect(self.options)
         try:

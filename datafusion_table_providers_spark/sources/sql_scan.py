@@ -71,16 +71,21 @@ class SqlSlice(InputPartition):
 
 
 class SqlScanReader(DataSourceReader):
-    """Options: ``relation``, ``dialect`` (default: the subclass's
-    ``DIALECT``), and the JSON-encoded ``extra_where``, ``columns``,
-    ``order_by`` and ``partition_clauses``, plus ``limit``. Subclasses set
-    ``DIALECT`` and implement ``read``."""
+    """Options: ``relation`` and the JSON-encoded ``extra_where``,
+    ``columns`` and ``partition_clauses``. Subclasses set ``DIALECT``
+    (``None``: the ``dialect`` option picks it) and implement ``read``."""
+
+    DIALECT: Optional[str] = None
+    #: sort/limit pushdown (reference mod.rs:505-607), set by a subclass
+    #: that takes them; ``None`` sends neither
+    order_by: Optional[List[str]] = None
+    limit: Optional[str] = None
 
     def __init__(self, schema, options):
         self.spark_schema = schema
         self.options = options
         self.relation = options.get("relation")
-        self.dialect = DIALECTS[options.get("dialect", self.DIALECT)]
+        self.dialect = DIALECTS[self.DIALECT or options.get("dialect", "odbc")]
         # caller-supplied SQL fragments ANDed into every partition's WHERE —
         # the runtime semi-join reduction path (sources/dynamic_filter.py)
         # injects its IN-list / range clause here
@@ -89,11 +94,6 @@ class SqlScanReader(DataSourceReader):
         # has no pruning hook, so required columns are threaded through the
         # ``columns`` option and the generated SELECT names exactly those.
         self.columns = json.loads(options.get("columns", "null"))
-        # Sort/limit pushdown (reference mod.rs:505-607), same explicit-option
-        # contract. Inexact: the limit bounds each PARTITION's fetch, and
-        # Spark's own TopK/limit above the scan stays the global truth.
-        self.order_by = json.loads(options.get("order_by", "null"))
-        self.limit = options.get("limit")
         self.clauses = json.loads(options.get("partition_clauses", "[]"))
 
     def pushFilters(self, filters):

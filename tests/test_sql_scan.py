@@ -98,11 +98,12 @@ def test_scan_sql_differs_only_in_quoting():
         q = DIALECTS[dialect].quote_ident
         opts = {
             "relation": "t",
-            "dialect": dialect,
             "columns": json.dumps(COLUMNS),
             "extra_where": json.dumps(_extra_where(dialect)),
             "partition_clauses": json.dumps(range_slices(q("id"), 1, 40, 4)),
         }
+        if cls is DBAPIReader:
+            opts["dialect"] = dialect
         r = cls(None, opts)
         assert list(r.pushFilters([GreaterThanOrEqual(("id",), 10)])) == []
         sqls = [r.scan_sql(p) for p in r.partitions()]
@@ -142,6 +143,36 @@ def test_sqlite_boolean_columns_read(spark, tmp_path):
         assert sorted(tuple(r) for r in df.collect()) == [
             (1, True), (2, False), (3, None)
         ]
+    # SQLite stores any value in a BOOLEAN column; text such as 'false'
+    # (a CSV import) is not a boolean and must fail, not read as True
+    con = sqlite3.connect(path)
+    con.execute("INSERT INTO flags VALUES (4, 'false')")
+    con.commit()
+    con.close()
+    with pytest.raises(Exception, match="not a boolean value"):
+        sqlite_reader_df(spark, SQLiteBackend(path), "flags").collect()
+
+
+@pytest.mark.parametrize("bad", ["false", "no", 2, 0.5])
+def test_boolean_column_rejects_non_boolean_values(bad):
+    import pyarrow as pa
+
+    from datafusion_table_providers_spark.sources.dbapi_source import _column
+
+    assert _column([1, 0, None, True], pa.bool_()).to_pylist() == [
+        True, False, None, True
+    ]
+    with pytest.raises(ValueError, match="not a boolean value"):
+        _column([1, bad], pa.bool_())
+
+
+def test_options_the_readers_do_not_take():
+    # DuckDB's dialect is fixed; the DB-API reader takes no sort/limit
+    opts = {"relation": "t", "dialect": "mysql", "order_by": '["v"]', "limit": "5"}
+    assert DuckDBReader(None, opts).scan_sql() == (
+        'SELECT * FROM t ORDER BY v LIMIT 5'
+    )
+    assert DBAPIReader(None, opts).scan_sql() == "SELECT * FROM t"
 
 
 def test_duckdb_reader_counts_rows_once(spark, tmp_path):
